@@ -127,13 +127,14 @@ def main() -> None:
             return dt
 
         # The anchor's code path (binaryFile scan + broadcast path join +
-        # Python foreachPartition sink) is disjoint from the parquet
+        # text-datasource letter sink) is disjoint from the parquet
         # warm-up in _fresh_session and takes several executions to reach
-        # steady state (measured: 5.2, 5.1, 3.9, 1.9, 1.9, 1.7 s on a
-        # fresh session — JIT + Python-worker pool spin-up, NOT GC: the
-        # same decay shows with System.gc() disabled).  Warm with one
-        # small-fixture pass plus two discarded full-corpus runs so the
-        # median measures the engine, not the compiler.
+        # steady state (measured with the former Python row-writer sink:
+        # 5.2, 5.1, 3.9, 1.9, 1.9, 1.7 s on a fresh session — JIT +
+        # Python-worker pool spin-up, NOT GC: the same decay shows with
+        # System.gc() disabled).  Warm with one small-fixture pass plus
+        # two discarded full-corpus runs so the median measures the
+        # engine, not the compiler.
         small = "/root/reference/checker/test_small.txt"
         if os.path.exists(small):
             _ref_once(small)

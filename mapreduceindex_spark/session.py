@@ -47,9 +47,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # local[N] puts driver + all executor threads in one JVM: size the
-        # heap for 32 concurrent tasks (the 128 GiB box affords it; override
-        # with SPARK_DRIVER_MEM when co-tenanted)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        # heap for 32 concurrent tasks where the box affords it; override
+        # with SPARK_DRIVER_MEM when co-tenanted
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Fixture `events` carries TIMESTAMP(NANOS) parquet columns, which
@@ -60,6 +63,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: heap ceiling: what 32 concurrent local tasks need (sized on a 128 GiB box)
+_DRIVER_MEM_CAP_MB = 24 * 1024
+
+
+def _default_driver_memory() -> str:
+    """A quarter of physical memory (``MemTotal``), capped at 24g.
+
+    A fixed 24g heap outgrows a 15 GB box, where the kernel kills the JVM
+    once the heap has grown past free memory. Without ``/proc/meminfo``
+    (non-Linux hosts) the cap is used.
+    """
+    try:
+        with open("/proc/meminfo") as fh:
+            mem_total_kb = int(fh.readline().split()[1])  # "MemTotal: N kB"
+    except OSError:
+        return f"{_DRIVER_MEM_CAP_MB}m"
+    return f"{min(mem_total_kb // 4 // 1024, _DRIVER_MEM_CAP_MB)}m"
 
 
 def ensure_session_confs(spark: SparkSession) -> None:

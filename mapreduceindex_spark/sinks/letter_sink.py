@@ -9,8 +9,10 @@ checker diffs all 26, ``checker/checker.sh:25-33``).
 
 Scale design: the index is repartitioned BY LETTER (26-way hash on the
 first character) and sorted within partitions, so each letter's lines are
-produced in global order by exactly one task, which streams them straight
-into the final ``<letter>.txt`` (single-node contract mode). At 100 TB
+produced in global order by exactly one task. Every byte is written by
+Spark's own text datasource through the output-commit protocol, so task
+retries and speculative attempts are safe on any master; the driver only
+renames each letter's single committed part file into place. At 100 TB
 the per-letter flat text files are themselves an artifact of the
 reference's contract — a cluster deployment uses ``materialize="parquet"``
 (letter-partitioned parquet, order reconstructed by ``ORDER BY``).
@@ -20,7 +22,10 @@ from __future__ import annotations
 
 import os
 import string
+from collections import defaultdict
+from urllib.parse import urlparse
 
+from py4j.java_gateway import is_instance_of
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -53,11 +58,18 @@ def write_letter_files(
 ) -> None:
     """Materialize the per-letter index from an inverted-index DataFrame.
 
-    - ``materialize="txt"`` (the reference contract): ``out_dir/{a..z}.txt``.
-      One Spark job: partition by letter (hash, 26 buckets), sort within
-      partitions by the reference's global order, and write each letter's
-      lines directly to ``<letter>.txt`` from the owning task. Empties are
-      pre-touched so all 26 files always exist.
+    A scheme-less ``out_dir`` is resolved against the caller's working
+    directory, not the JVM's.
+
+    - ``materialize="txt"`` (the reference contract): exactly the 26 files
+      ``out_dir/{a..z}.txt``, 0-byte for letters with no words; stale
+      letter files are replaced, other entries of ``out_dir`` are left
+      alone. Spark's text datasource writes the letter-partitioned lines
+      into a staging dir inside ``out_dir`` (``partitionBy('letter')``,
+      commit protocol); the driver then renames each letter's single
+      committed part file to ``<letter>.txt`` with the Hadoop FileSystem
+      API (26 metadata ops) and deletes the staging dir. No row passes
+      through the driver or a Python worker.
     - ``materialize="parquet"`` (cluster mode): letter-partitioned parquet
       at ``out_dir/letter=<x>/`` carrying ``(df, word, line)``, no
       driver-side concatenation — the 100 TB form, where a single flat
@@ -65,158 +77,71 @@ def write_letter_files(
       is data, not file layout: readers reconstruct it with
       ``ORDER BY df DESC, word`` (parquet part-file order is not a
       contract), and partition pruning serves per-letter queries.
-    - ``materialize="txt_dist"`` (cluster-safe txt): the exact same 26
-      ``<letter>.txt`` files, but written through Spark's text datasource
-      with ``partitionBy('letter')`` — every byte goes through the
-      output-commit protocol (task-attempt staging + atomic commit, so
-      stragglers/retries/speculation are safe), then the driver renames
-      each letter's single committed part file to ``<letter>.txt`` via
-      the Hadoop FileSystem API (26 metadata ops, works on HDFS/object
-      stores with a rename-capable committer, not just a local disk).
-      This is the answer to "I want the reference's txt contract FROM a
-      cluster" (VERDICT r04 missing #3); plain ``txt`` mode remains the
-      zero-copy single-node fast path.
     """
-    lines = format_lines(index)
-    if materialize == "parquet":
-        (
-            lines.repartition(26, "letter")
-            .sortWithinPartitions(
-                "letter", F.col("df").desc(), F.col("word").asc()
-            )
-            .write.mode("overwrite")
-            .partitionBy("letter")
-            .parquet(out_dir)
-        )
-        return
-    if materialize == "txt_dist":
-        _write_letter_files_distributed(lines, out_dir)
-        return
-    if materialize != "txt":
+    if materialize not in ("txt", "parquet"):
         raise ValueError(f"write_letter_files: unknown materialize {materialize!r}")
-    # Single-node (reference-contract) mode: each letter lands wholly in one
-    # hash partition of the 26-way repartition, and rows arrive sorted by
-    # (letter, df DESC, word ASC), so every task can stream its letters
-    # straight into final ``<letter>.txt`` files — no dynamic-partition
-    # commit protocol, no staging directory, no driver-side concat pass
-    # over the data (the prior staged ``partitionBy`` + concat cost ~2× the
-    # bytes and a second sweep of file opens).  Truncating ``open`` keeps a
-    # retried task idempotent.  This requires a filesystem shared with the
-    # driver (true on a single node); multi-node clusters use the
-    # ``parquet`` mode above, where per-letter flat text files are
-    # themselves the bottleneck.
-    # The tasks below write FINAL files straight to a driver-visible path;
-    # on a multi-node master they would land on executor-local disks and
-    # the output would be silently empty, and speculative duplicate
-    # attempts could interleave one file. Refuse anything but local mode
-    # (the reference contract is single-node); clusters use 'parquet'.
-    sc = lines.sparkSession.sparkContext
-    if not (sc.master or "").startswith("local"):
-        raise RuntimeError(
-            "write_letter_files(materialize='txt') requires a local[*] "
-            f"master (got {sc.master!r}): executor tasks write final "
-            "files to a driver-shared filesystem. On a cluster use "
-            "materialize='parquet'."
-        )
-    if (sc.getConf().get("spark.speculation", "false") or "").lower() == "true":
-        raise RuntimeError(
-            "write_letter_files(materialize='txt') is incompatible with "
-            "spark.speculation=true: duplicate attempts would truncate "
-            "and interleave the same final file concurrently."
-        )
-    os.makedirs(out_dir, exist_ok=True)
-    # golden-dir contract: all 26 files exist, 0-byte for empty letters
-    # (``checker/test_out_small/d.txt``); tasks then overwrite the
-    # non-empty ones.
-    for ch in string.ascii_lowercase:
-        open(os.path.join(out_dir, f"{ch}.txt"), "w").close()
-
-    def _write_partition(rows) -> None:
-        current, fh = None, None
-        try:
-            for row in rows:
-                if row.letter != current:
-                    if fh is not None:
-                        fh.close()
-                    current = row.letter
-                    fh = open(
-                        os.path.join(out_dir, f"{current}.txt"),
-                        "w",
-                        encoding="ascii",
-                    )
-                fh.write(row.line)
-                fh.write("\n")
-        finally:
-            if fh is not None:
-                fh.close()
-
+    if not urlparse(out_dir).scheme:
+        out_dir = os.path.abspath(out_dir)
+    lines = _by_letter(format_lines(index))
+    if materialize == "parquet":
+        lines.write.mode("overwrite").partitionBy("letter").parquet(out_dir)
+        return
+    # inside out_dir, so the sink writes nowhere else; the ``_`` prefix
+    # hides it from Spark readers of out_dir while the write is in flight
+    staging = out_dir.rstrip("/") + "/_letter_staging"
     (
-        lines.repartition(26, "letter")
-        .sortWithinPartitions(
-            "letter", F.col("df").desc(), F.col("word").asc()
-        )
-        .select("letter", "line")
-        .foreachPartition(_write_partition)
-    )
-
-
-def _write_letter_files_distributed(lines: DataFrame, out_dir: str) -> None:
-    """Cluster-safe txt materialization: Spark text sink + 26 renames.
-
-    The data path is entirely Spark's: 26-way letter repartition, sort
-    within partitions by the reference order, ``partitionBy('letter')``
-    text write into a staging dir — the commit protocol guarantees each
-    letter directory holds exactly the committed output of one task
-    attempt (each letter lands wholly in one partition, and text rows
-    preserve task write order, so the single part file IS the letter
-    file, bytes-identical to single-node mode). The driver then performs
-    26 Hadoop-FS renames (metadata-only on HDFS; one server-side copy on
-    object stores) and touches 0-byte files for absent letters — the
-    golden-dir contract that all 26 exist. No row ever passes through
-    the driver.
-    """
-    staging = out_dir.rstrip("/") + ".__letter_staging__"
-    (
-        lines.repartition(26, "letter")
-        .sortWithinPartitions(
-            "letter", F.col("df").desc(), F.col("word").asc()
-        )
-        .select("letter", F.col("line").alias("value"))
+        lines.select("letter", F.col("line").alias("value"))
         .write.mode("overwrite")
         .partitionBy("letter")
         .text(staging)
     )
-    spark = lines.sparkSession
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    fs = HPath(staging).getFileSystem(hconf)
-    fs.mkdirs(HPath(out_dir))
+    _rename_into_place(lines.sparkSession, staging, out_dir)
+
+
+def _by_letter(lines: DataFrame) -> DataFrame:
+    """Each letter wholly in one of 26 hash partitions, its rows in the
+    reference order (df DESC, word ASC) — the layout both writers share.
+    """
+    return lines.repartition(26, "letter").sortWithinPartitions(
+        "letter", F.col("df").desc(), F.col("word").asc()
+    )
+
+
+def _rename_into_place(spark, staging: str, out_dir: str) -> None:
+    """Move each letter's committed part file to ``out_dir/<letter>.txt``.
+
+    Each letter lands wholly in one partition and text rows keep task
+    write order, so the letter's single part file IS the letter file.
+    Renames, creates and deletes go to the raw filesystem under a
+    checksummed one (Hadoop's local ``file:``), which would otherwise
+    leave a ``.<letter>.txt.crc`` sidecar next to every letter file.
+    """
+    HPath = spark._jvm.org.apache.hadoop.fs.Path
+    fs = HPath(out_dir).getFileSystem(spark._jsc.hadoopConfiguration())
+    if is_instance_of(
+        spark.sparkContext._gateway, fs, "org.apache.hadoop.fs.ChecksumFileSystem"
+    ):
+        fs = fs.getRawFileSystem()
+    parts = defaultdict(list)
+    for st in fs.globStatus(HPath(staging, "letter=*/part-*")) or []:
+        path = st.getPath()
+        parts[path.getParent().getName()[len("letter="):]].append(path)
+    for ch, found in parts.items():
+        if len(found) > 1:
+            # each letter is one hash partition -> one committed part
+            # file; >1 means the layout assumption broke (e.g.
+            # maxRecordsPerFile rolled the writer) and a blind rename
+            # would drop lines
+            raise RuntimeError(
+                f"letter {ch!r}: {len(found)} part files in {staging}; "
+                "expected exactly 1"
+            )
     for ch in string.ascii_lowercase:
         dst = HPath(out_dir, f"{ch}.txt")
-        if fs.exists(dst):
-            fs.delete(dst, False)
-        letter_dir = HPath(staging, f"letter={ch}")
-        part = None
-        if fs.exists(letter_dir):
-            parts = [
-                st.getPath()
-                for st in fs.listStatus(letter_dir)
-                if st.getPath().getName().startswith("part-")
-            ]
-            if len(parts) > 1:
-                # each letter is one hash partition -> one committed
-                # part file; >1 means the layout assumption broke (e.g.
-                # maxRecordsPerFile rolled the writer) and a blind
-                # rename would drop lines
-                raise RuntimeError(
-                    f"letter {ch!r}: {len(parts)} part files in "
-                    f"{staging}; expected exactly 1"
-                )
-            part = parts[0] if parts else None
-        if part is not None:
-            if not fs.rename(part, dst):
-                raise RuntimeError(f"rename failed: {part} -> {dst}")
+        fs.delete(dst, False)
+        if ch in parts:
+            if not fs.rename(parts[ch][0], dst):
+                raise RuntimeError(f"rename failed: {parts[ch][0]} -> {dst}")
         else:
             fs.create(dst, True).close()  # 0-byte empty-letter contract
     fs.delete(HPath(staging), True)

@@ -5,7 +5,11 @@ from __future__ import annotations
 import glob
 import json
 import os
+import string
 import tempfile
+from collections import defaultdict
+
+import pytest
 
 from mapreduceindex_spark.sinks.shards import write_training_shards
 from mapreduceindex_spark.sources.documents import (
@@ -164,34 +168,91 @@ def test_letter_sink_parquet_mode_matches_txt(spark):
         assert got == want, ch
 
 
-def test_letter_sink_txt_dist_golden_parity(spark):
-    """The cluster-safe txt_dist mode (text datasource + commit protocol
-    + rename) must produce the 26 letter files BYTE-IDENTICAL to the
-    reference's golden output — same parity the single-node txt mode is
-    held to, through the new path (VERDICT r04 #7)."""
-    manifest = "/root/reference/checker/test_small.txt"
-    golden = "/root/reference/checker/test_out_small"
-    if not os.path.exists(manifest):
-        import pytest
+# df ties broken by word (bat < bob), df DESC before word (be first),
+# numeric id order ([2 10], not "10" < "2"), and letters with no words
+SINK_DOCS = [(10, "be bob bat apple"), (2, "bat bob zed be"), (3, "apple be cat")]
+LETTERS = string.ascii_lowercase
 
-        pytest.skip("reference corpus not present")
+
+def _letter_bytes(docs):
+    """The 26 letter files of ``docs`` in the reference format, computed in
+    plain Python (texts are lowercase words, so tokenizing is ``split``)."""
+    postings = defaultdict(set)
+    for doc_id, text in docs:
+        for w in text.split():
+            postings[w].add(doc_id)
+    files = dict.fromkeys(LETTERS, b"")
+    for w, ids in sorted(postings.items(), key=lambda kv: (-len(kv[1]), kv[0])):
+        files[w[0]] += f"{w}:[{' '.join(map(str, sorted(ids)))}]\n".encode()
+    return files
+
+
+@pytest.mark.parametrize(
+    "docs, stale, relative, runs",
+    [
+        pytest.param(SINK_DOCS, {}, False, 1, id="fresh"),
+        pytest.param(
+            SINK_DOCS,
+            {"a.txt": "stale:[1]\n" * 50, "q.txt": "quux:[9]\n"},
+            False,
+            1,
+            id="stale-letter-files-overwritten",
+        ),
+        pytest.param(SINK_DOCS, {}, False, 2, id="second-run-identical"),
+        pytest.param([], {}, False, 1, id="empty-index"),
+        pytest.param(SINK_DOCS, {}, True, 1, id="relative-out-dir"),
+    ],
+)
+def test_letter_sink_txt_bytes(
+    spark, tmp_path, monkeypatch, docs, stale, relative, runs
+):
+    """The txt sink writes exactly the 26 reference-format letter files
+    into ``out_dir`` (0-byte for empty letters) and nothing else: no
+    checksum sidecars, no ``_SUCCESS``, no staging left behind. A relative
+    ``out_dir`` resolves against the caller's working directory."""
     from mapreduceindex_spark.operators.inverted_index import inverted_index
     from mapreduceindex_spark.sinks.letter_sink import write_letter_files
-    from mapreduceindex_spark.sources.manifest import corpus_from_manifest
 
-    docs = corpus_from_manifest(spark, manifest)
-    out = tempfile.mkdtemp(prefix="letters_dist_")
-    write_letter_files(inverted_index(docs), out, materialize="txt_dist")
-    import string as _string
+    out = tmp_path / "out"
+    out.mkdir()
+    for name, body in stale.items():
+        (out / name).write_text(body)
+    if relative:
+        monkeypatch.chdir(tmp_path)
+    idx = inverted_index(
+        spark.createDataFrame(docs, "doc_id long, text string")
+    )
+    want = _letter_bytes(docs)
+    for _ in range(runs):
+        write_letter_files(idx, "out" if relative else str(out))
+        got = {c: (out / f"{c}.txt").read_bytes() for c in LETTERS}
+        assert got == want
+        assert sorted(os.listdir(out)) == [f"{c}.txt" for c in LETTERS]
 
-    for ch in _string.ascii_lowercase:
-        with open(os.path.join(out, f"{ch}.txt")) as fh:
-            got = fh.read().split()
-        with open(os.path.join(golden, f"{ch}.txt")) as fh:
-            want = fh.read().split()
-        assert got == want, ch
-    # staging dir must be cleaned up
-    assert not os.path.exists(out + ".__letter_staging__")
+
+def test_letter_sink_refuses_split_letter(spark, tmp_path):
+    """A letter whose lines the writer rolled into several part files is
+    an error, not a silent partial rename."""
+    from mapreduceindex_spark.operators.inverted_index import inverted_index
+    from mapreduceindex_spark.sinks.letter_sink import write_letter_files
+
+    idx = inverted_index(
+        spark.createDataFrame(SINK_DOCS, "doc_id long, text string")
+    )
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "1")
+    try:
+        with pytest.raises(RuntimeError, match="part files"):
+            write_letter_files(idx, str(tmp_path))
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+
+
+def test_letter_sink_rejects_unknown_materialize(spark, tmp_path):
+    from mapreduceindex_spark.sinks.letter_sink import write_letter_files
+
+    idx = spark.createDataFrame([], "word string, df long, doc_ids array<long>")
+    with pytest.raises(ValueError, match="txt_dist"):
+        write_letter_files(idx, str(tmp_path), materialize="txt_dist")
 
 
 def test_orc_source_round_trip(spark):
