@@ -22,7 +22,8 @@ one per tracked operator instead of growing without bound.
 alive while the input plan's fingerprint is unchanged. Its users:
 ``dedup._pair_front_end`` (``dedup_front``) and the MinHash signatures
 over it (``dedup_sigs``), ``inverted_index._query_front``
-(``query_front`` — the postings and doc lengths every index read runs
+(``query_front`` — the doc_id-partitioned postings, each carrying its
+word's df and its document's length, that every index read runs
 against), ``text_analysis`` winnowing fingerprints (``winnow_fps``),
 ``multimodal`` coarse dHash frames (``dhash_coarse``), ``layout``
 z-order keys (``zorder_keyed``) and ``graph`` co-purchase edges

@@ -141,14 +141,22 @@ def search_docs(
     """Term search over the corpus — the lookup the inverted index exists
     to serve. Returns (doc_id, n_matched) for docs containing ``any`` or
     ``all`` of the normalized terms, ranked (n_matched DESC, doc_id ASC).
+    Any other ``mode`` raises ``ValueError``.
 
     Plan: a term filter on the memoized query front's postings (one
-    distinct (w, doc_id) row per posting, built once per corpus — see
-    :func:`_query_front`) plus one small aggregate on doc_id; the corpus
-    text is never re-tokenized per query. A query with no term that
-    normalizes to a word returns an empty frame without building the
-    front or running a job.
+    distinct (w, doc_id) row per posting, built once per corpus and
+    partitioned by doc_id — see :func:`_query_front`) plus one aggregate
+    on doc_id that runs with no exchange; the corpus text is never
+    re-tokenized per query. The result is ranked in one task
+    (``repartition(1)`` + a within-partition sort: the rows go to the
+    driver anyway), so no range-sampling job or range exchange runs. A
+    query with no term that normalizes to a word returns an empty frame
+    without building the front or running a job.
     """
+    if mode not in ("any", "all"):
+        raise ValueError(
+            f"search_docs: mode must be 'any' or 'all', got {mode!r}"
+        )
     norm = sorted({t for t in (normalize_token_py(x) for x in terms) if t})
     if not norm:
         # Limit 0 plans as an empty local relation: no front, no job
@@ -163,7 +171,9 @@ def search_docs(
     )
     if mode == "all":
         hits = hits.filter(F.col("n_matched") == len(norm))
-    return hits.orderBy(F.col("n_matched").desc(), F.col("doc_id").asc())
+    return hits.repartition(1).sortWithinPartitions(
+        F.col("n_matched").desc(), F.col("doc_id").asc()
+    )
 
 
 def normalize_token_py(tok: str) -> str:
@@ -492,11 +502,12 @@ def bm25_search(
     Plan: everything corpus-wide comes from the memoized query front
     (:func:`_query_front`): N and avgdl enter as literals, and one
     conditional pivot of the term-filtered postings yields each
-    matching document's tf and the term's df (carried on every
-    posting) in fixed ``tf_i``/``df_i`` columns, joined to the
-    persisted doc lengths. Documents matching no term score 0 and are
-    dropped, so only matching documents are scored. Top-k is
-    TakeOrdered — no global sort materialization.
+    matching document's tf, the term's df and the document's length
+    ``dl`` (all carried on every posting) in fixed columns. The front
+    is partitioned by doc_id, so the pivot runs with no exchange and
+    no join. Documents matching no term score 0 and are dropped, so
+    only matching documents are scored. Top-k is TakeOrdered — one
+    job, no global sort materialization.
     """
     from mapreduceindex_spark.functions.exact import q6
 
@@ -506,21 +517,22 @@ def bm25_search(
     if not terms:
         raise ValueError("bm25_search: query has no normalized words")
     front = _query_front(documents)
-    # tf_i / df_i in sorted-term order from ONE doc-keyed aggregate; the
-    # score below is a single SQL expression (one parse instead of a
-    # py4j round trip per arithmetic node — the same tree either way)
-    piv = (
+    # dl and tf_i / df_i in sorted-term order from ONE doc-keyed
+    # aggregate; the score below is a single SQL expression (one parse
+    # instead of a py4j round trip per arithmetic node — the same tree
+    # either way)
+    scored = (
         front.postings.filter(F.col("w").isin(terms))
         .groupBy("doc_id")
         .agg(
+            F.max("dl").alias("dl"),
             *[
                 F.expr(f"max(CASE WHEN w = '{t}' THEN {v} END) AS {c}_{i}")
                 for i, t in enumerate(terms)
                 for v, c in (("size(positions)", "tf"), ("df", "df"))
-            ]
+            ],
         )
     )
-    scored = front.dl.join(piv, "doc_id")
     # no document has a word when n_docs == 0: no row reads avgdl
     avgdl = front.total_tokens / front.n_docs if front.n_docs else 1.0
     n, one, half = _dbl(front.n_docs), _dbl(1.0), _dbl(0.5)
@@ -594,8 +606,8 @@ def _positional_postings(documents: DataFrame) -> DataFrame:
     front (:func:`_query_front`).
 
     The token stream is exchanged on ``w`` alone, so the (w, doc_id)
-    aggregate — and any window over ``w`` stacked on it — runs behind
-    that single exchange."""
+    aggregate — and the front's ``df`` window over ``w`` stacked on
+    it — runs behind that single exchange."""
     from mapreduceindex_spark.functions.text import words
 
     base = documents.select("doc_id", words(F.col("text")).alias("ws"))
@@ -610,10 +622,9 @@ def _positional_postings(documents: DataFrame) -> DataFrame:
 class _QueryFront(NamedTuple):
     """The memoized per-corpus state every read is answered from."""
 
-    #: (w, doc_id, positions array<long> ascending, df) — persisted
+    #: (w, doc_id, positions array<long> ascending, df, dl) — persisted
+    #: once, hash-partitioned on doc_id
     postings: DataFrame
-    #: (doc_id, dl) for every document with at least one word — persisted
-    dl: DataFrame
     n_docs: int
     total_tokens: int
 
@@ -631,14 +642,16 @@ def _query_front(documents: DataFrame) -> _QueryFront:
     re-tokenizing the corpus per query.
 
     Built once per corpus through ``caching.memo`` keyed by the input
-    plan's fingerprint (the ``dedup._pair_front_end`` discipline): the
-    positional postings with each word's ``df`` as a window count over
-    ``w`` (it rides the postings' own exchange), the per-document token
-    counts ``dl`` aggregated from those postings, and the corpus
-    constants ``(n_docs, total_tokens)`` from one collect, kept as a
-    scalar memo. The build costs one postings exchange plus that one
-    stats collect. Bounded: one live front; a different corpus releases
-    and rebuilds it.
+    plan's fingerprint (the ``dedup._pair_front_end`` discipline): ONE
+    persisted frame of the positional postings, each carrying its
+    word's ``df`` (a window count over ``w`` riding the postings' own
+    exchange) and its document's token count ``dl`` (a window sum over
+    ``doc_id`` behind a second exchange on ``doc_id``). The frame is
+    stored in the layout the reads consume: hash-partitioned on
+    ``doc_id``, so every per-document aggregate a read runs needs no
+    exchange. The corpus constants ``(n_docs, total_tokens)`` come from
+    one stats collect over it, kept as a scalar memo. Bounded: one live
+    front; a different corpus releases and rebuilds it.
 
     Staleness: like every memo user, new data behind an IDENTICAL plan
     (files replaced under the same path) is not detected — call
@@ -647,28 +660,29 @@ def _query_front(documents: DataFrame) -> _QueryFront:
     fingerprint = caching.plan_fingerprint(documents)
 
     def _build():
-        post = (
+        return [
             _positional_postings(documents)
             .withColumn(
                 "df", F.count(F.lit(1)).over(Window.partitionBy("w"))
             )
+            .repartition("doc_id")
+            .withColumn(
+                "dl",
+                F.sum(F.size("positions")).over(Window.partitionBy("doc_id")),
+            )
             .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        dl = (
-            post.groupBy("doc_id")
-            .agg(F.sum(F.size("positions")).alias("dl"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        return [post, dl]
+        ]
 
-    post, dl = caching.memo("query_front", fingerprint, _build)
+    (post,) = caching.memo("query_front", fingerprint, _build)
     stats = _FRONT_STATS.get(fingerprint)
     if stats is None:
-        row = dl.agg(F.count(F.lit(1)), F.sum("dl")).collect()[0]
+        row = post.agg(
+            F.countDistinct("doc_id"), F.sum(F.size("positions"))
+        ).collect()[0]
         stats = (row[0], row[1] or 0)
         _FRONT_STATS.clear()
         _FRONT_STATS[fingerprint] = stats
-    return _QueryFront(post, dl, *stats)
+    return _QueryFront(post, *stats)
 
 
 def phrase_search_indexed(documents: DataFrame, phrase: str) -> DataFrame:
@@ -681,11 +695,14 @@ def phrase_search_indexed(documents: DataFrame, phrase: str) -> DataFrame:
     — the driver verifies BOTH against the same oracle SQL.
 
     The postings are the memoized query front's (:func:`_query_front`),
-    persisted once per corpus and shared with the other reads. A query
-    filters them to its terms and gathers each document's lists into one
-    ``term → positions`` map with a single doc-keyed aggregate (no join
-    per term); the merge chain then runs inside that row. Candidate
-    positions stay array-typed and per-doc-bounded.
+    persisted once per corpus, partitioned by doc_id and shared with
+    the other reads. A query filters them to its terms and gathers each
+    document's lists into one ``term → positions`` map with a single
+    doc-keyed aggregate that needs no exchange (and no join per term);
+    the merge chain then runs inside that row. Candidate positions stay
+    array-typed and per-doc-bounded. The hits are ranked in one task
+    (``repartition(1)`` + a within-partition sort), as ``search_docs``
+    ranks its own.
     """
     terms = [t for t in (normalize_token_py(x) for x in phrase.split()) if t]
     if not terms:
@@ -711,5 +728,6 @@ def phrase_search_indexed(documents: DataFrame, phrase: str) -> DataFrame:
             "doc_id", F.expr(f"CAST(size({cand}) AS BIGINT) AS n_hits")
         )
         .filter(F.col("n_hits") > 0)
-        .orderBy(F.col("n_hits").desc(), F.col("doc_id").asc())
+        .repartition(1)
+        .sortWithinPartitions(F.col("n_hits").desc(), F.col("doc_id").asc())
     )

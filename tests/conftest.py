@@ -3,6 +3,8 @@ fixture tables registered as views (mirrors the driver's oracle harness)."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 
@@ -12,9 +14,13 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+#: the suite's cores and shuffle partitions: the box's, not a fixed count
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", cores=8, shuffle_partitions=8)
+    s = get_spark(app_name="tests", cores=CPUS, shuffle_partitions=CPUS)
     yield s
 
 

@@ -86,8 +86,12 @@ def test_index_lifecycle_stored_side_joins_without_exchange(spark):
         tempfile.mkdtemp(prefix="bkt_idx_"),
     )
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        # the delta aggregate's shuffle can serve the join only when it
+        # has as many partitions as the stored index has buckets
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         merged = merge_index(
             read_table(spark, "t_idx_lifecycle"),
             docs.filter("doc_id % 10 = 0"),
@@ -104,3 +108,4 @@ def test_index_lifecycle_stored_side_joins_without_exchange(spark):
         assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)

@@ -2,11 +2,13 @@
 
 ``search_docs``, ``bm25_search`` and ``phrase_search_indexed`` answer
 from one persisted postings front built once per corpus
-(``inverted_index._query_front``). These tests pin the front's
-contract: repeat reads skip the build, a different corpus gets its own
-results, ``caching.release()`` rebuilds correctly, the live caches stay
-bounded, and BM25 stays bit-identical to its DuckDB twin on an edge
-corpus.
+(``inverted_index._query_front``), partitioned by doc_id. These tests
+pin the front's contract: repeat reads skip the build, a warm read
+starts a fixed number of jobs with no doc_id exchange or range sort, a
+different corpus gets its own results, results are ranked across
+partitions, ``caching.release()`` rebuilds correctly, the live caches
+stay bounded, and BM25 stays bit-identical to its DuckDB twin on an
+edge corpus.
 """
 
 from __future__ import annotations
@@ -80,6 +82,22 @@ def _jobs_in_group(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _own_operators(plan):
+    """One-line descriptions of a read's executed physical operators,
+    down to, not into, the cached front's scan."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _own_operators(plan.executedPlan())
+    if name.endswith("QueryStage"):
+        return _own_operators(plan.plan())
+    ops = [plan.simpleString(25)]
+    if name != "InMemoryTableScan":
+        kids = plan.children()
+        for i in range(kids.size()):
+            ops += _own_operators(kids.apply(i))
+    return ops
+
+
 def _persisted_rdds(spark):
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
@@ -101,6 +119,45 @@ def test_repeat_read_starts_fewer_jobs(spark):
         _, first = _jobs_in_group(spark, f"qf-{name}-1", reads[name])
         _, again = _jobs_in_group(spark, f"qf-{name}-2", reads[name])
         assert first == again
+
+
+#: jobs a warm read starts: the ranking shuffle's map stage + the
+#: result stage for search and phrase; one TakeOrdered job for bm25
+WARM_READ_JOBS = {"search": 2, "phrase": 2, "bm25": 1}
+
+
+def test_warm_read_plan_contract(spark):
+    caching.release()
+    docs = _docs(spark, CORPUS_A)
+    reads = {
+        "search": lambda: II.search_docs(docs, ["quick", "fox"], "all"),
+        "phrase": lambda: II.phrase_search_indexed(docs, "quick brown"),
+        "bm25": lambda: II.bm25_search(docs, "quick fox"),
+    }
+    for read in reads.values():
+        read().collect()  # build the front
+    for name, read in reads.items():
+        df = read()
+        _, jobs = _jobs_in_group(spark, f"qf-plan-{name}", df.collect)
+        assert jobs == WARM_READ_JOBS[name], name
+        ops = _own_operators(df._jdf.queryExecution().executedPlan())
+        assert ops[-1].startswith("InMemoryTableScan"), (name, ops)
+        for op in ops:
+            low = op.lower()
+            assert "rangepartitioning" not in low, (name, op)
+            assert not (
+                op.startswith("Exchange") and "partitioning(doc_id" in low
+            ), (name, op)
+
+
+def test_search_rejects_unknown_mode(spark):
+    docs = _docs(spark, CORPUS_A)
+    for mode in ("ALL", "Any", "every", ""):
+        with pytest.raises(ValueError, match="mode"):
+            II.search_docs(docs, ["fox"], mode)
+    # checked before the empty-terms early return
+    with pytest.raises(ValueError, match="mode"):
+        II.search_docs(docs, ["!!!"], "ALL")
 
 
 def test_results_follow_the_corpus(spark):
@@ -142,7 +199,7 @@ def test_live_frames_bounded_across_alternating_corpora(spark):
         live = len(caching._LIVE.get("query_front", []))
         census.append((live, _persisted_rdds(spark)))
         assert len(II._FRONT_STATS) == 1
-    assert {n for n, _ in census} == {2}
+    assert {n for n, _ in census} == {1}
     assert census[-1][1] <= census[1][1]
 
 
@@ -180,6 +237,44 @@ def test_front_is_partition_count_blind(spark):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         caching.release()
     assert runs[0] == runs[1]
+
+
+#: 48 docs from four texts, under scattered doc_ids: many docs tie on
+#: n_matched / n_hits, and each tie group spans the front's partitions
+TIES = [
+    (
+        (i * 37) % 101 + 1,
+        [
+            "red fox red fox",
+            "red fox and a red dog",
+            "a blue dog",
+            "red fox red fox red fox dog",
+        ][i % 4],
+    )
+    for i in range(48)
+]
+
+
+def test_ranking_ties_ordered_across_partitions(spark):
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        caching.release()
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        docs = _docs(spark, TIES)
+        front = II._query_front(docs).postings
+        assert front.rdd.getNumPartitions() > 1
+        for terms in (["red", "dog"], ["fox", "dog", "a"]):
+            for mode in ("any", "all"):
+                got = _rows(II.search_docs(docs, terms, mode))
+                assert got == _search_oracle(TIES, terms, mode)
+                assert len(got) >= 12
+        for phrase in ("red fox", "fox red", "a blue dog"):
+            got = _rows(II.phrase_search_indexed(docs, phrase))
+            assert got == _phrase_oracle(TIES, phrase)
+            assert len(got) >= 12
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        caching.release()
 
 
 #: BM25 edge corpus: docs whose every token normalizes to '' (they stay
@@ -240,3 +335,5 @@ def test_front_constants_skip_docs_without_words(spark):
     assert front.total_tokens == sum(len(_words(t)) for _, t in EDGE)
     dfs = dict(_rows(front.postings.select("w", "df").distinct()))
     assert dfs["zebra"] == sum(1 for _, t in EDGE if "zebra" in _words(t))
+    dls = dict(_rows(front.postings.select("doc_id", "dl").distinct()))
+    assert dls == {d: len(_words(t)) for d, t in EDGE if _words(t)}

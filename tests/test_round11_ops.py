@@ -120,9 +120,9 @@ def test_memo_keys_are_front_ends_only():
         "zorder_keyed",
         "dhash_coarse",
         "winnow_fps",
-        # inverted_index._query_front: the per-corpus postings + doc
-        # lengths every index read filters — a shared front end, not a
-        # query result (each read's output is built per call on top)
+        # inverted_index._query_front: the per-corpus postings (with df
+        # and doc lengths) every index read filters — a shared front end,
+        # not a query result (each read's output is built per call on top)
         "query_front",
     }
     pkg = Path(__file__).resolve().parents[1] / "mapreduceindex_spark"
