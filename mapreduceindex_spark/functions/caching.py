@@ -30,18 +30,24 @@ z-order keys (``zorder_keyed``) and ``graph`` co-purchase edges
 (``copurchase_edges``). Their driver-side scalars register through
 :func:`scalar_memo`. Staleness rule for all of them: new data behind an
 IDENTICAL plan is not detected — call ``release()`` after such a
-refresh.
+refresh. :func:`stats` reports each memo key's fingerprint, builds, hits
+and live frames.
 """
 
 from __future__ import annotations
 
 import hashlib
+from collections import Counter
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
 
 _LIVE: dict[str, list[DataFrame]] = {}
 _MEMO_FP: dict[str, str] = {}
+#: memo() calls per key that rebuilt / reused the frames, since process
+#: start (``release`` keeps them)
+_BUILDS: Counter[str] = Counter()
+_HITS: Counter[str] = Counter()
 
 #: registry of the DRIVER-SIDE scalar memos (clone census, Σdf² tier
 #: probe, fitted k-means model, layout bounds) kept beside the frame
@@ -153,13 +159,33 @@ def memo(
         except Exception:
             live = False
         if live:
+            _HITS[key] += 1
             return frames
     release(key)
+    _BUILDS[key] += 1
     frames = list(builder())
     for f in frames:
         track(f, key)
     _MEMO_FP[key] = fingerprint
     return frames
+
+
+def stats() -> dict[str, dict]:
+    """The memo state, per key :func:`memo` has seen: the current
+    ``fingerprint`` (``None`` once released), ``builds`` and ``hits``
+    (calls that rebuilt or reused the frames, counted since process
+    start; a release does not reset them) and ``live_frames`` (tracked
+    frames now held). No bytes or build times: memo frames are lazy,
+    so neither is known until a consumer first runs them."""
+    return {
+        key: {
+            "fingerprint": _MEMO_FP.get(key),
+            "builds": builds,
+            "hits": _HITS[key],
+            "live_frames": len(_LIVE.get(key, [])),
+        }
+        for key, builds in _BUILDS.items()
+    }
 
 
 def release_unmemoized() -> None:

@@ -33,6 +33,11 @@ def micro(c: Column) -> Column:
     (VERDICT r03 "What's wrong" #1). This formulation is explicit
     half-away-from-zero built from IEEE-exact primitives only (multiply,
     add 0.5, floor), so every engine/version computes the same integer.
+
+    The result holds ``c`` three times (the sign test and both branches),
+    and the optimizer copies the result into any filter above it. Pass a
+    column reference, not a large expression: compute the expression in
+    its own column first.
     """
     return (
         F.when(c >= 0, F.floor(c * 1e6 + F.lit(0.5)))
@@ -42,7 +47,11 @@ def micro(c: Column) -> Column:
 
 
 def q6(c: Column) -> Column:
-    """Tie-free 6-dp rounding of a double (micro-quantize, scale back)."""
+    """Tie-free 6-dp rounding of a double (micro-quantize, scale back).
+
+    Like :func:`micro`, it holds ``c`` three times and is copied into
+    any filter above it: pass a column reference, not a large
+    expression."""
     return micro(c).cast("double") / 1e6
 
 

@@ -491,23 +491,36 @@ def bm25_search(
     saturation the standard ``(k1+1)`` numerator. N and avgdl count
     only documents with at least one normalized word.
 
-    Determinism/oracle exactness: per-term score columns are summed in
-    SORTED term order as one fixed expression tree (no float aggregate
-    over an unordered term set), ``avgdl`` is an exact BIGINT
-    token-count divided once, and the final score is 6-dp tie-free
-    quantized — the DuckDB twin writes the identical expression, so
-    doubles match bit-for-bit. A document missing a query term scores
-    ``idf·0.0 = +0.0`` for it.
+    Determinism/oracle exactness: the score is the sum of the per-term
+    contributions in SORTED term order as one fixed expression tree (no
+    float aggregate over an unordered term set), ``avgdl`` is an exact
+    BIGINT token-count divided once, and the final score is 6-dp
+    tie-free quantized — the DuckDB twin writes the identical
+    expression, so doubles match bit-for-bit. A document missing a
+    query term adds ``+0.0`` for it.
 
     Plan: everything corpus-wide comes from the memoized query front
-    (:func:`_query_front`): N and avgdl enter as literals, and one
-    conditional pivot of the term-filtered postings yields each
-    matching document's tf, the term's df and the document's length
-    ``dl`` (all carried on every posting) in fixed columns. The front
-    is partitioned by doc_id, so the pivot runs with no exchange and
-    no join. Documents matching no term score 0 and are dropped, so
-    only matching documents are scored. Top-k is TakeOrdered — one
-    job, no global sort materialization.
+    (:func:`_query_front`): N and avgdl enter as literals. A projection
+    over the term-filtered postings computes each posting's
+    contribution ``idf(df)·(tf·(k1+1))/(tf + k1·norm(dl))`` once, from
+    the tf, the term's df and the document's length ``dl`` that every
+    posting carries, and keys it by the term's ordinal in the sorted
+    query. One doc-keyed aggregate pivots the contributions by ordinal
+    and sums them in its result expression; the front is partitioned
+    by doc_id, so it runs with no exchange and no join. Only matching
+    documents are scored; a score that quantizes to 0 is dropped. Top-k
+    is TakeOrdered — one job, no global sort materialization.
+
+    Compiled-code reuse: no term string may enter a subexpression the
+    aggregate shares between its functions. Whole-stage codegen orders
+    such subexpressions by a hash that includes their literals, so a
+    term-keyed pivot (``CASE WHEN w = '<term>'`` feeding two
+    aggregates) generates different Java source for every query, which
+    Janino compiles on each call. Keyed by ordinal, every query with the
+    same term count runs one cached class. The sum sits in the
+    aggregate's result, not in a projection above it, so the
+    ``score > 0`` filter cannot be pushed down into a copy of it, and
+    ``q6`` (which holds its argument three times) gets a column.
     """
     from mapreduceindex_spark.functions.exact import q6
 
@@ -517,22 +530,6 @@ def bm25_search(
     if not terms:
         raise ValueError("bm25_search: query has no normalized words")
     front = _query_front(documents)
-    # dl and tf_i / df_i in sorted-term order from ONE doc-keyed
-    # aggregate; the score below is a single SQL expression (one parse
-    # instead of a py4j round trip per arithmetic node — the same tree
-    # either way)
-    scored = (
-        front.postings.filter(F.col("w").isin(terms))
-        .groupBy("doc_id")
-        .agg(
-            F.max("dl").alias("dl"),
-            *[
-                F.expr(f"max(CASE WHEN w = '{t}' THEN {v} END) AS {c}_{i}")
-                for i, t in enumerate(terms)
-                for v, c in (("size(positions)", "tf"), ("df", "df"))
-            ],
-        )
-    )
     # no document has a word when n_docs == 0: no row reads avgdl
     avgdl = front.total_tokens / front.n_docs if front.n_docs else 1.0
     n, one, half = _dbl(front.n_docs), _dbl(1.0), _dbl(0.5)
@@ -540,23 +537,37 @@ def bm25_search(
         f"(({one} - {_dbl(b)}) + "
         f"(({_dbl(b)} * CAST(dl AS DOUBLE)) / {_dbl(avgdl)}))"
     )
-    # a doc missing term i reads tf_i = df_i = 0: that idf is still
-    # positive and finite, so the term adds idf·0.0 = +0.0 as it would
-    # with the corpus df
+    tf, df = "CAST(size(positions) AS DOUBLE)", "CAST(df AS DOUBLE)"
+    idf = f"ln({one} + ((({n} - {df}) + {half}) / ({df} + {half})))"
+    contribution = (
+        f"({idf} * (({tf} * {_dbl(k1 + 1.0)}) / "
+        f"({tf} + ({_dbl(k1)} * {norm_len}))))"
+    )
+    sorted_terms = ", ".join(f"'{t}'" for t in terms)
+    # the SQL strings are one parse each instead of a py4j round trip
+    # per arithmetic node — the same tree either way. A document
+    # missing term i adds coalesce(NULL, 0.0) = +0.0, as the twin's
+    # idf·0.0 does
     score = _dbl(0.0)
-    for i in range(len(terms)):
-        tf_t = f"CAST(coalesce(tf_{i}, 0) AS DOUBLE)"
-        df_t = f"CAST(coalesce(df_{i}, 0) AS DOUBLE)"
-        idf = f"ln({one} + ((({n} - {df_t}) + {half}) / ({df_t} + {half})))"
+    for i in range(1, len(terms) + 1):
         score = (
-            f"({score} + ({idf} * (({tf_t} * {_dbl(k1 + 1.0)}) / "
-            f"({tf_t} + ({_dbl(k1)} * {norm_len})))))"
+            f"({score} + coalesce(max(CASE WHEN _i = {i} THEN _c END), "
+            f"{_dbl(0.0)}))"
         )
     return (
-        scored.select(
+        front.postings.filter(F.col("w").isin(terms))
+        .select(
+            "doc_id",
+            "dl",
+            F.expr(f"array_position(array({sorted_terms}), w)").alias("_i"),
+            F.expr(contribution).alias("_c"),
+        )
+        .groupBy("doc_id")
+        .agg(F.max("dl").alias("dl"), F.expr(score).alias("_s"))
+        .select(
             "doc_id",
             F.col("dl").cast("long").alias("doc_len"),
-            q6(F.expr(score)).alias("score"),
+            q6(F.col("_s")).alias("score"),
         )
         .filter(F.col("score") > 0.0)
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())

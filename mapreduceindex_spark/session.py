@@ -11,6 +11,15 @@ the *same* logical plans run unchanged on a 1000-executor cluster:
 - Arrow enabled for every pandas/Python boundary crossing.
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle and are cluster-invariant.
+- PySpark's DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  every Column function call walks the Python stack and makes five
+  extra py4j round trips (active session, a JVM class lookup, a conf
+  read, and the origin set and clear): a quarter to a third of a warm
+  index read's planning time. Spark errors then lose their "DataFrame
+  call site" section; the error class and message are unchanged.
+  PySpark caches the flag at the process's first Column call, so it
+  holds when that call comes after this factory has run.
 """
 
 from __future__ import annotations
@@ -46,6 +55,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # local[N] puts driver + all executor threads in one JVM: size the
         # heap for 32 concurrent tasks where the box affords it; override
         # with SPARK_DRIVER_MEM when co-tenanted

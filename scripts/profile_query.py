@@ -2,7 +2,10 @@
 (the builder call — driver-side plan construction plus any collect()
 jobs the builder runs) and EXEC (the noop-sink write of the returned
 frame), guide §1-style, so optimization effort lands on the phase that
-actually costs.
+actually costs. Each run also prints its Janino compile count (the
+``CodegenMetrics`` compilation count delta): a query that compiles on
+every warm run generates different Java source per call and pays the
+compile each time.
 
 Usage: SPARK_GRAFT_SF_DIR=... python scripts/profile_query.py q1,q2 [runs]
 """
@@ -28,21 +31,24 @@ def main() -> None:
 
     spark = get_spark(app_name="profile")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     qs = entrymod.queries()
     for name in names:
         fn = qs[name]
         for i in range(runs):
             spark.sparkContext.setJobDescription(f"profile:{name}:{i}")
+            c0 = codegen.METRIC_COMPILATION_TIME().getCount()
             t0 = time.time()
             df = fn(spark, SF)
             t1 = time.time()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.time()
+            compiles = codegen.METRIC_COMPILATION_TIME().getCount() - c0
             caching.release_unmemoized()
             spark._jvm.System.gc()
             print(
                 f"{name} run{i}: build={t1 - t0:6.2f}s exec={t2 - t1:6.2f}s "
-                f"total={t2 - t0:6.2f}s",
+                f"total={t2 - t0:6.2f}s compiles={compiles}",
                 flush=True,
             )
     spark.stop()

@@ -7,8 +7,9 @@ pin the front's contract: repeat reads skip the build, a warm read
 starts a fixed number of jobs with no doc_id exchange or range sort, a
 different corpus gets its own results, results are ranked across
 partitions, ``caching.release()`` rebuilds correctly, the live caches
-stay bounded, and BM25 stays bit-identical to its DuckDB twin on an
-edge corpus.
+stay bounded, ``caching.stats()`` counts the front's builds and hits, a
+warm read with new terms reuses its compiled code, and BM25 stays
+bit-identical to its DuckDB twin on an edge corpus.
 """
 
 from __future__ import annotations
@@ -148,6 +149,80 @@ def test_warm_read_plan_contract(spark):
             assert not (
                 op.startswith("Exchange") and "partitioning(doc_id" in low
             ), (name, op)
+
+
+def _compiles(spark):
+    """Janino compilations so far (cache hits do not count)."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return codegen.METRIC_COMPILATION_TIME().getCount()
+
+
+#: per read kind, lists of queries with the same term count: the first
+#: warms the compiled code, the others bring new terms
+SAME_SHAPE_READS = {
+    "search": (
+        lambda docs, q: II.search_docs(docs, q.split()),
+        [["quick fox", "lazy dog", "brown cows"]],
+    ),
+    "phrase": (
+        II.phrase_search_indexed,
+        [["quick brown", "lazy dog", "a fox"]],
+    ),
+    "bm25": (
+        II.bm25_search,
+        [
+            ["fox", "dog", "cows"],
+            ["quick fox", "lazy dog", "brown the"],
+            ["quick fox dog", "the lazy brown", "jumps over sleeps"],
+        ],
+    ),
+}
+
+
+def test_warm_reads_reuse_compiled_code(spark):
+    caching.release()
+    docs = _docs(spark, CORPUS_A)
+    for name, (read, groups) in SAME_SHAPE_READS.items():
+        for warm, *others in groups:
+            read(docs, warm).collect()
+            before = _compiles(spark)
+            for q in others:
+                df = read(docs, q)
+                assert df.collect(), (name, q)
+                if name == "bm25":
+                    # each posting's score is computed once, and the
+                    # filter above does not copy the score tree
+                    plan = df._jdf.queryExecution().executedPlan()
+                    lns = sum(
+                        op.count("ln(") for op in _own_operators(plan)
+                    )
+                    assert lns == 1, (q, lns)
+            assert _compiles(spark) == before, (name, others)
+
+
+def test_memo_stats_count_builds_and_hits(spark):
+    caching.release()
+    zero = {"builds": 0, "hits": 0}
+    start = caching.stats().get("query_front", zero)
+    docs_a = _docs(spark, CORPUS_A)
+    for _ in range(10):
+        II.search_docs(docs_a, ["fox"]).collect()
+    st = caching.stats()["query_front"]
+    assert st["builds"] - start["builds"] == 1
+    assert st["hits"] - start["hits"] == 9
+    assert st["live_frames"] == 1
+    assert st["fingerprint"] == caching.plan_fingerprint(docs_a)
+    docs_b = _docs(spark, CORPUS_B)
+    II.search_docs(docs_b, ["fox"]).collect()
+    st = caching.stats()["query_front"]
+    assert st["builds"] - start["builds"] == 2
+    assert st["hits"] - start["hits"] == 9
+    assert st["live_frames"] == 1
+    assert st["fingerprint"] == caching.plan_fingerprint(docs_b)
+    caching.release()
+    st = caching.stats()["query_front"]
+    assert st["fingerprint"] is None and st["live_frames"] == 0
+    assert st["builds"] - start["builds"] == 2
 
 
 def test_search_rejects_unknown_mode(spark):
