@@ -8324,9 +8324,9 @@ GROUP BY b.cluster_rep, b.n_members, b.best_quality
                          ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
         """,
     }
-    # phrase_search_indexed is the posting-list-merge plan for the SAME
-    # question phrase_search answers by window scan — one ground truth,
-    # two physical strategies, both driver-verified against it
+    # phrase_search_indexed is an alias of phrase_search (one
+    # posting-list-merge plan): both keys answer the same question and
+    # are driver-verified against the same SQL
     d["phrase_search_indexed"] = d["phrase_search"]
     # lsh_recall composes its two verified legs on the pair key
     d["lsh_recall"] = f"""

@@ -22,12 +22,13 @@ one per tracked operator instead of growing without bound.
 alive while the input plan's fingerprint is unchanged. Its users:
 ``dedup._pair_front_end`` (``dedup_front``) and the MinHash signatures
 over it (``dedup_sigs``), ``inverted_index._query_front``
-(``query_front`` — the doc_id-partitioned postings, each carrying its
-word's df and its document's length, that every index read runs
-against), ``text_analysis`` winnowing fingerprints (``winnow_fps``),
-``multimodal`` coarse dHash frames (``dhash_coarse``), ``layout``
-z-order keys (``zorder_keyed``) and ``graph`` co-purchase edges
-(``copurchase_edges``). Their driver-side scalars register through
+(``query_front`` — the doc_id-partitioned positional postings, each
+carrying its word's df and its document's length, that every index
+read runs against: ``search_docs``, ``bm25_search``, ``phrase_search``
+and ``positional_index``), ``text_analysis`` winnowing fingerprints
+(``winnow_fps``), ``multimodal`` coarse dHash frames (``dhash_coarse``),
+``layout`` z-order keys (``zorder_keyed``) and ``graph`` co-purchase
+edges (``copurchase_edges``). Their driver-side scalars register through
 :func:`scalar_memo`. Staleness rule for all of them: new data behind an
 IDENTICAL plan is not detected — call ``release()`` after such a
 refresh. :func:`stats` reports each memo key's fingerprint, builds, hits

@@ -5,10 +5,9 @@ oracle-gated driver queries.
 Each query writes a fixture table OUT through one non-parquet format and
 reads it BACK through the matching source reader, then runs an
 already-verified downstream aggregate — so the oracle is the SAME ground
-truth as the parquet path (the ``phrase_search_indexed`` "one truth, two
-physical routes" discipline) and any encode/decode defect (quoting,
-escaping, type round-trip, schema projection) surfaces as a value-hash
-mismatch, not just a row count.
+truth as the parquet path (one truth, two physical routes) and any
+encode/decode defect (quoting, escaping, type round-trip, schema
+projection) surfaces as a value-hash mismatch, not just a row count.
 
 Scale notes: the write is one pass (repartitioned only by the format's
 natural file sizing); reads are Spark-native sources keeping column

@@ -350,41 +350,49 @@ def phrase_search(documents: DataFrame, phrase: str) -> DataFrame:
     """Positional phrase search: documents containing the normalized words
     of ``phrase`` CONSECUTIVELY, with the occurrence count — what the
     word-level index cannot answer (``search_docs`` ``mode="all"`` finds
-    co-occurrence anywhere; this is the "exact quote" query).
+    co-occurrence anywhere; this is the "exact quote" query). Overlapping
+    occurrences all count ("batch batch" hits twice in "batch batch
+    batch"). Ranked (n_hits DESC, doc_id ASC) like ``search_docs``.
 
-    Plan: posexplode + ``lead`` builds length-|phrase| word windows per
-    document (the same codegen'd shape as ``ngram_counts``), filters on
-    the single phrase string, and aggregates per doc — the phrase
-    equality filter sits directly on the window projection, so only
-    matching positions reach the aggregate. Ranked (n_hits DESC, doc_id
-    ASC) like ``search_docs``.
+    Plan: a posting-list merge over the memoized query front's
+    positional postings (:func:`_query_front`), persisted once per
+    corpus, partitioned by doc_id and shared with the other reads — the
+    corpus text is never re-walked per query. A query filters the
+    postings to its terms and gathers each document's lists into one
+    ``term → positions`` map with a single doc-keyed aggregate that
+    needs no exchange (and no join per term). Adjacency is a chain of
+    ``array_intersect(positions+1, next)`` merges over that map, held in
+    the aggregate's result expression: the ``n_hits > 0`` filter above
+    cannot be pushed through an aggregate, so the chain is evaluated
+    once, not copied into a pushed-down filter. Candidate positions stay
+    array-typed and per-doc-bounded. The hits are ranked in one task
+    (``repartition(1)`` + a within-partition sort), as ``search_docs``
+    ranks its own.
     """
-    from mapreduceindex_spark.functions.text import words
-
     terms = [t for t in (normalize_token_py(x) for x in phrase.split()) if t]
     if not terms:
         raise ValueError("phrase_search: phrase has no normalized words")
-    n = len(terms)
-    target = " ".join(terms)
-    base = documents.select("doc_id", words(F.col("text")).alias("ws"))
-    toks = base.select(
-        "doc_id",
-        F.size("ws").alias("nw"),
-        F.posexplode("ws").alias("pos", "w"),
-    )
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("w")] + [F.lead("w", j).over(win) for j in range(1, n)]
+    # a doc missing a term reads a NULL list, and the chain stays NULL
+    per_doc = "map_from_entries(collect_list(struct(w, positions)))"
+    cand = f"{per_doc}['{terms[0]}']"
+    for term in terms[1:]:
+        cand = (
+            f"array_intersect(transform({cand}, x -> x + 1), "
+            f"{per_doc}['{term}'])"
+        )
     return (
-        toks.select(
-            "doc_id", "nw", "pos", F.concat_ws(" ", *parts).alias("window")
-        )
-        .filter(
-            (F.col("pos") <= F.col("nw") - n) & (F.col("window") == target)
-        )
+        _query_front(documents)
+        .postings.filter(F.col("w").isin(sorted(set(terms))))
         .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-        .orderBy(F.col("n_hits").desc(), F.col("doc_id").asc())
+        .agg(F.expr(f"CAST(size({cand}) AS BIGINT)").alias("n_hits"))
+        .filter(F.col("n_hits") > 0)
+        .repartition(1)
+        .sortWithinPartitions(F.col("n_hits").desc(), F.col("doc_id").asc())
     )
+
+
+#: the same read under its indexed name (a driver key and perfbench use it)
+phrase_search_indexed = phrase_search
 
 
 def reindex_docs(
@@ -584,49 +592,30 @@ def _dbl(x: float) -> str:
 def positional_index(documents: DataFrame) -> DataFrame:
     """Positional inverted index: for every (word, doc) posting, the
     occurrence count and the ascending token positions — the postings
-    the query front (:func:`_query_front`) memoizes for the reads,
-    exported as an artifact so phrase/proximity queries become
-    posting-list merges instead of corpus scans (the standard IR trade:
-    ~|tokens| index rows buy O(postings) phrase lookup).
+    the query front (:func:`_query_front`) holds for the reads,
+    exported as an artifact (the standard IR trade: ~|tokens| index
+    rows buy O(postings) phrase lookup, the merge ``phrase_search``
+    runs).
 
     Positions are 0-based indexes into the normalized NON-EMPTY word
     sequence (``functions.text.words`` drops empty-normalized tokens
-    before positions exist) — exactly the basis ``phrase_search``'s
-    windows walk, so consecutive positions mean an exact quote.
-    One posexplode → one exchange on the word, the (word, doc_id)
-    aggregate running behind it; positions are sorted in-group and
-    serialized to a space-joined string (driver arrays are unhashable;
-    the string is also the compact wire form). Lazy: the plan is built
-    from the input every call and nothing is cached.
+    before positions exist), so consecutive positions mean an exact
+    quote. A projection of the front's persisted postings, ordered
+    (word, doc_id): positions are serialized to a space-joined string
+    (driver arrays are unhashable; the string is also the compact wire
+    form). The front is built on the first read of a corpus and reused
+    by every later read of it; the front's staleness rule applies — new
+    data behind an identical plan needs ``caching.release()``.
     """
-    post = _positional_postings(documents)
     return (
-        post.select(
+        _query_front(documents)
+        .postings.select(
             F.col("w").alias("word"),
             "doc_id",
             F.size("positions").cast("long").alias("n_occurrences"),
             F.array_join("positions", " ").alias("positions"),
         )
         .orderBy("word", "doc_id")
-    )
-
-
-def _positional_postings(documents: DataFrame) -> DataFrame:
-    """(w, doc_id, positions array<long> ascending) — the postings
-    behind ``positional_index`` (serialized artifact) and the query
-    front (:func:`_query_front`).
-
-    The token stream is exchanged on ``w`` alone, so the (w, doc_id)
-    aggregate — and the front's ``df`` window over ``w`` stacked on
-    it — runs behind that single exchange."""
-    from mapreduceindex_spark.functions.text import words
-
-    base = documents.select("doc_id", words(F.col("text")).alias("ws"))
-    toks = base.select("doc_id", F.posexplode("ws").alias("pos", "w"))
-    return toks.repartition("w").groupBy("w", "doc_id").agg(
-        F.array_sort(
-            F.collect_list(F.col("pos").cast("long"))
-        ).alias("positions")
     )
 
 
@@ -648,21 +637,25 @@ _FRONT_STATS: dict[str, tuple[int, int]] = caching.scalar_memo({})
 def _query_front(documents: DataFrame) -> _QueryFront:
     """The reads' shared, memoized query front — the reference's "build
     the index once, then look words up" (PAPER.md) for a long-lived
-    session: ``search_docs``, ``bm25_search`` and
-    ``phrase_search_indexed`` all run against it instead of
-    re-tokenizing the corpus per query.
+    session: ``search_docs``, ``bm25_search``, ``phrase_search`` and
+    ``positional_index`` all answer from it, each with one plan, instead
+    of re-tokenizing the corpus per query.
 
     Built once per corpus through ``caching.memo`` keyed by the input
     plan's fingerprint (the ``dedup._pair_front_end`` discipline): ONE
-    persisted frame of the positional postings, each carrying its
-    word's ``df`` (a window count over ``w`` riding the postings' own
-    exchange) and its document's token count ``dl`` (a window sum over
-    ``doc_id`` behind a second exchange on ``doc_id``). The frame is
-    stored in the layout the reads consume: hash-partitioned on
-    ``doc_id``, so every per-document aggregate a read runs needs no
-    exchange. The corpus constants ``(n_docs, total_tokens)`` come from
-    one stats collect over it, kept as a scalar memo. Bounded: one live
-    front; a different corpus releases and rebuilds it.
+    persisted frame of the positional postings ``(w, doc_id,
+    positions)``. The token stream (``functions.text.words``, so
+    positions index the non-empty normalized words) is exchanged on
+    ``w`` alone; the (w, doc_id) aggregate and each posting's word
+    ``df`` (a window count over ``w``) run behind that single exchange.
+    Each posting also carries its document's token count ``dl`` (a
+    window sum over ``doc_id`` behind a second exchange on ``doc_id``).
+    The frame is stored in the layout the reads consume:
+    hash-partitioned on ``doc_id``, so every per-document aggregate a
+    read runs needs no exchange. The corpus constants ``(n_docs,
+    total_tokens)`` come from one stats collect over it, kept as a
+    scalar memo. Bounded: one live front; a different corpus releases
+    and rebuilds it.
 
     Staleness: like every memo user, new data behind an IDENTICAL plan
     (files replaced under the same path) is not detected — call
@@ -671,8 +664,19 @@ def _query_front(documents: DataFrame) -> _QueryFront:
     fingerprint = caching.plan_fingerprint(documents)
 
     def _build():
+        from mapreduceindex_spark.functions.text import words
+
+        toks = documents.select(
+            "doc_id", F.posexplode(words(F.col("text"))).alias("pos", "w")
+        )
         return [
-            _positional_postings(documents)
+            toks.repartition("w")
+            .groupBy("w", "doc_id")
+            .agg(
+                F.array_sort(
+                    F.collect_list(F.col("pos").cast("long"))
+                ).alias("positions")
+            )
             .withColumn(
                 "df", F.count(F.lit(1)).over(Window.partitionBy("w"))
             )
@@ -694,51 +698,3 @@ def _query_front(documents: DataFrame) -> _QueryFront:
         _FRONT_STATS.clear()
         _FRONT_STATS[fingerprint] = stats
     return _QueryFront(post, *stats)
-
-
-def phrase_search_indexed(documents: DataFrame, phrase: str) -> DataFrame:
-    """``phrase_search`` answered from the positional postings instead
-    of a window scan: each phrase term selects its posting list, and
-    adjacency is a chain of ``array_intersect(positions+1, next)``
-    merges — the payoff ``positional_index`` exists for (term-selected
-    postings ≪ corpus; the scan variant re-walks every token of every
-    document per query). Identical output contract to ``phrase_search``
-    — the driver verifies BOTH against the same oracle SQL.
-
-    The postings are the memoized query front's (:func:`_query_front`),
-    persisted once per corpus, partitioned by doc_id and shared with
-    the other reads. A query filters them to its terms and gathers each
-    document's lists into one ``term → positions`` map with a single
-    doc-keyed aggregate that needs no exchange (and no join per term);
-    the merge chain then runs inside that row. Candidate positions stay
-    array-typed and per-doc-bounded. The hits are ranked in one task
-    (``repartition(1)`` + a within-partition sort), as ``search_docs``
-    ranks its own.
-    """
-    terms = [t for t in (normalize_token_py(x) for x in phrase.split()) if t]
-    if not terms:
-        raise ValueError("phrase_search_indexed: phrase has no words")
-    per_doc = (
-        _query_front(documents)
-        .postings.filter(F.col("w").isin(sorted(set(terms))))
-        .groupBy("doc_id")
-        .agg(
-            F.expr(
-                "map_from_entries(collect_list(struct(w, positions))) AS _m"
-            )
-        )
-    )
-    # a doc missing a term reads a NULL list, and the chain stays NULL
-    cand = f"_m['{terms[0]}']"
-    for term in terms[1:]:
-        cand = (
-            f"array_intersect(transform({cand}, x -> x + 1), _m['{term}'])"
-        )
-    return (
-        per_doc.select(
-            "doc_id", F.expr(f"CAST(size({cand}) AS BIGINT) AS n_hits")
-        )
-        .filter(F.col("n_hits") > 0)
-        .repartition(1)
-        .sortWithinPartitions(F.col("n_hits").desc(), F.col("doc_id").asc())
-    )

@@ -1494,9 +1494,8 @@ def streaming_timeout_sessions_tws(
     ``transformWithStateInPandas`` — the production arbitrary-state API
     going forward (first-class TIMERS instead of the single implicit
     timeout slot, named typed state variables, optional TTL, RocksDB
-    state store). Same semantics, same oracle, second physical plan
-    (the ``phrase_search_indexed`` "one ground truth, two routes"
-    discipline).
+    state store). Same semantics, same oracle, second physical plan:
+    both routes are checked against one ground truth.
 
     API mapping from the ``applyInPandasWithState`` original:
 

@@ -20,7 +20,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+#: the checkout this script lives in — the drive runs that tree's code
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb
 from pyspark.sql import SparkSession
@@ -77,7 +79,7 @@ def compare(sdf, ddf, name):
 
 def main():
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -1,15 +1,17 @@
 """The memoized per-corpus query front behind the index reads.
 
-``search_docs``, ``bm25_search`` and ``phrase_search_indexed`` answer
-from one persisted postings front built once per corpus
-(``inverted_index._query_front``), partitioned by doc_id. These tests
-pin the front's contract: repeat reads skip the build, a warm read
-starts a fixed number of jobs with no doc_id exchange or range sort, a
-different corpus gets its own results, results are ranked across
-partitions, ``caching.release()`` rebuilds correctly, the live caches
-stay bounded, ``caching.stats()`` counts the front's builds and hits, a
-warm read with new terms reuses its compiled code, and BM25 stays
-bit-identical to its DuckDB twin on an edge corpus.
+``search_docs``, ``bm25_search``, ``phrase_search`` and
+``positional_index`` answer from one persisted postings front built
+once per corpus (``inverted_index._query_front``), partitioned by
+doc_id. These tests pin the front's contract: repeat reads skip the
+build, every read kind shares one front, a warm read starts a fixed
+number of jobs with no doc_id exchange or range sort, a different
+corpus gets its own results, results are ranked across partitions,
+``caching.release()`` rebuilds correctly, the live caches stay
+bounded, ``caching.stats()`` counts the front's builds and hits, a
+warm read with new terms reuses its compiled code, the phrase merge
+chain is evaluated once, and BM25 stays bit-identical to its DuckDB
+twin on an edge corpus.
 """
 
 from __future__ import annotations
@@ -83,20 +85,27 @@ def _jobs_in_group(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def _own_operators(plan):
-    """One-line descriptions of a read's executed physical operators,
-    down to, not into, the cached front's scan."""
+def _own_operators(plan, describe=lambda op: op.simpleString(25)):
+    """Descriptions of a read's executed physical operators, down to,
+    not into, the cached front's scan: one line each by default."""
     name = plan.nodeName()
     if name == "AdaptiveSparkPlan":
-        return _own_operators(plan.executedPlan())
+        return _own_operators(plan.executedPlan(), describe)
     if name.endswith("QueryStage"):
-        return _own_operators(plan.plan())
-    ops = [plan.simpleString(25)]
+        return _own_operators(plan.plan(), describe)
+    ops = [describe(plan)]
     if name != "InMemoryTableScan":
         kids = plan.children()
         for i in range(kids.size()):
-            ops += _own_operators(kids.apply(i))
+            ops += _own_operators(kids.apply(i), describe)
     return ops
+
+
+def _evaluated(op):
+    """Every expression an operator evaluates, as one string (an
+    aggregate's one-line description omits its result expressions)."""
+    exprs = op.expressions()
+    return " ".join(exprs.apply(i).toString() for i in range(exprs.size()))
 
 
 def _persisted_rdds(spark):
@@ -198,6 +207,70 @@ def test_warm_reads_reuse_compiled_code(spark):
                     )
                     assert lns == 1, (q, lns)
             assert _compiles(spark) == before, (name, others)
+
+
+@pytest.mark.parametrize("phrase", ["the lazy", "quick brown fox"])
+def test_phrase_chain_evaluated_once(spark, phrase):
+    """The n-term phrase's n-1 ``array_intersect`` merges sit in the
+    doc-keyed aggregate's result, so the ``n_hits > 0`` filter above
+    cannot be pushed down into a second copy of the chain."""
+    caching.release()
+    docs = _docs(spark, CORPUS_A)
+    df = II.phrase_search(docs, phrase)
+    assert _rows(df) == _phrase_oracle(CORPUS_A, phrase)
+    plan = df._jdf.queryExecution().executedPlan()
+    chains = sum(
+        op.count("array_intersect(")
+        for op in _own_operators(plan, _evaluated)
+    )
+    assert chains == len(phrase.split()) - 1, chains
+
+
+def _positional_oracle(rows):
+    out = []
+    for doc_id, text in rows:
+        slots = {}
+        for pos, w in enumerate(_words(text)):
+            slots.setdefault(w, []).append(pos)
+        for w, ps in slots.items():
+            out.append((w, doc_id, len(ps), " ".join(map(str, ps))))
+    return sorted(out)
+
+
+def test_reads_share_one_front(spark, tmp_path):
+    """phrase_search and positional_index reuse the front a search
+    built (no build, one hit each, one live frame); after
+    ``caching.release()`` positional_index follows a corpus replaced
+    behind an identical plan."""
+    caching.release()
+    path = str(tmp_path / "docs")
+    _docs(spark, CORPUS_A).write.parquet(path)
+    docs = spark.read.parquet(path)
+    II.search_docs(docs, ["fox"]).collect()
+    reads = {
+        "phrase": lambda: _rows(II.phrase_search(docs, "lazy dog")),
+        "positional": lambda: _rows(II.positional_index(docs)),
+    }
+    want = {
+        "phrase": _phrase_oracle(CORPUS_A, "lazy dog"),
+        "positional": _positional_oracle(CORPUS_A),
+    }
+    for name, read in reads.items():
+        before = caching.stats()["query_front"]
+        assert read() == want[name], name
+        after = caching.stats()["query_front"]
+        assert after["builds"] == before["builds"], name
+        assert after["hits"] == before["hits"] + 1, name
+        assert after["live_frames"] == 1, name
+    fingerprint = caching.plan_fingerprint(docs)
+    _docs(spark, CORPUS_B).write.mode("overwrite").parquet(path)
+    docs = spark.read.parquet(path)
+    # the memo cannot see the new files: the plan is the same
+    assert caching.plan_fingerprint(docs) == fingerprint
+    caching.release()
+    assert _rows(II.positional_index(docs)) == _positional_oracle(CORPUS_B)
+    assert caching.stats()["query_front"]["live_frames"] == 1
+    caching.release()
 
 
 def test_memo_stats_count_builds_and_hits(spark):

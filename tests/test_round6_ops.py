@@ -696,27 +696,34 @@ def test_positional_index_slots_and_phrase_adjacency(spark):
 
 
 def test_phrase_search_indexed_equals_scan_variant(spark):
-    """Two physical strategies, one answer: the posting-list-merge plan
-    must reproduce the window-scan plan's full output frame on real
-    fixture data — including overlapping self-adjacent phrases
-    ('batch batch' inside 'batch batch batch' hits twice)."""
+    """The posting-list merge must reproduce a plain window scan's full
+    output on real fixture data: here the scan is pure Python over the
+    collected documents, counting every window of normalized words equal
+    to the phrase — overlapping windows included ('batch batch' inside
+    'batch batch batch' hits twice)."""
     from mapreduceindex_spark.operators.inverted_index import (
+        normalize_token_py,
         phrase_search,
-        phrase_search_indexed,
     )
     from mapreduceindex_spark.session import load_table
 
     docs = load_table(spark, SF_SMALL, "documents")
+    texts = docs.select("doc_id", "text").collect()
     for phrase in ("order fast", "batch batch", "the spark"):
-        a = sorted(
-            tuple(r) for r in phrase_search(docs, phrase).collect()
-        )
-        b = sorted(
-            tuple(r)
-            for r in phrase_search_indexed(docs, phrase).collect()
-        )
-        assert a == b, phrase
-        assert a, f"degenerate fixture: no hits for {phrase!r}"
+        target = [normalize_token_py(t) for t in phrase.split()]
+        k = len(target)
+        want = []
+        for doc_id, text in texts:
+            norm = (normalize_token_py(t) for t in (text or "").split())
+            ws = [w for w in norm if w]
+            hits = sum(
+                ws[i : i + k] == target for i in range(len(ws) - k + 1)
+            )
+            if hits:
+                want.append((doc_id, hits))
+        got = sorted(tuple(r) for r in phrase_search(docs, phrase).collect())
+        assert got == sorted(want), phrase
+        assert got, f"degenerate fixture: no hits for {phrase!r}"
 
 
 def test_streaming_markov_stitches_across_micro_batches(spark, tmp_path):
