@@ -1,7 +1,7 @@
 """Tracked persistence for caches whose consumer is a RETURNED lazy plan.
 
-Some operators (``dedup.dup_spans``, ``multimodal.media_dhash_near_dups``,
-``inverted_index.index_delete``) persist an intermediate frame that
+Some operators (``dedup.dup_spans``, ``multimodal.media_dhash_near_dups``)
+persist an intermediate frame that
 multiple branches of the *returned* plan scan; no action runs inside the
 builder, so an unpersist-before-return would undo the cache before it
 ever materialized. Left alone, each invocation leaks its cached blocks

@@ -190,10 +190,12 @@ def merge_index(
     """Incrementally fold a new document batch into an existing index.
 
     ``array_union`` merges each word's postings with the new batch's —
-    the whole merge shuffles only (old index ∪ new batch pairs), never
-    the already-indexed corpus text. This is the reference's incremental
-    file consumption (``mapper.c:20-31``) taken to its scale conclusion:
-    index maintenance cost tracks the DELTA, not the corpus.
+    the already-indexed corpus text is never re-read, the reference's
+    incremental file consumption (``mapper.c:20-31``). Against a stored
+    index bucketed on ``word`` the stored side is not reshuffled; only
+    the delta is. The update still costs in proportion to the INDEX
+    size, not the delta: the full outer join reads every stored posting
+    list, and a caller that stores the result rewrites all of them.
     Invariant (tested): merge(index(A), B) ≡ index(A ∪ B).
     """
     delta = inverted_index(new_documents, ordered=False)
@@ -274,68 +276,38 @@ def postings_size(documents: DataFrame) -> DataFrame:
     )
 
 
-#: Delete sets at or under this cardinality apply as one broadcast array
-#: (zero shuffle of the index); larger sets switch to the join tier.
-#: 65 536 bigints ≈ 0.5 MB broadcast — far below driver/codegen limits,
-#: and array_except's per-row O(|D|) probe set stays cache-resident.
-INDEX_DELETE_BROADCAST_CAP = 65_536
-
-
 def index_delete(
     index: DataFrame,
     deleted_doc_ids: DataFrame,
-    broadcast_cap: int = INDEX_DELETE_BROADCAST_CAP,
+    broadcast_cap: int | None = None,
 ) -> DataFrame:
     """Incremental index maintenance, deletion side — ``merge_index``'s
     inverse: remove a set of retired doc_ids from every posting list and
     drop words whose list empties. The GDPR-takedown / recrawl-replace
     path of a production index.
 
-    Two fully distributed tiers, chosen by a scalar count probe (no id
-    ever reaches the driver — the r03 verdict flagged the previous
-    ``collect()`` + literal-array plan as a codegen-limit scale-killer):
+    One lazy plan, and building it runs no Spark job: the posting lists
+    are exploded, anti-joined against the delete set's ``doc_id`` (cast
+    to bigint; duplicate and absent ids change nothing), and
+    re-aggregated by word with ``array_sort``. A word whose list empties
+    has no rows left, so it drops out without a filter. No id reaches
+    the driver and none is embedded as a literal. The join strategy is
+    AQE's: it plans a sort-merge join and demotes it to a broadcast
+    once the delete set's runtime size is known — after the exploded
+    index's exchange has already run.
 
-    - ``|D| <= broadcast_cap``: the delete set is reduced to ONE row
-      holding a sorted id array on the executors, broadcast, and applied
-      with ``array_except`` in a single codegen'd projection — deletion
-      touches only the index rows, zero shuffles, and untouched posting
-      lists pass through unchanged.
-    - above the cap: posting lists are exploded, anti-joined against the
-      delete set (AQE picks broadcast-hash while the set fits, shuffle
-      beyond), and re-aggregated with ``array_sort`` — one exchange,
-      linear at any delete-set size, the right plan when a mass retire
-      approaches rebuild scale.
+    ``broadcast_cap`` is accepted for signature compatibility and
+    ignored.
 
     Invariant (tested): delete(index(A), D) ≡ index(A − D).
     """
-    # the distinct delete set feeds the scalar count probe AND the
-    # chosen tier: persist it (tracked, released on the next call) so
-    # the caller's delete-set plan — possibly a full table scan, as in
-    # reindex_docs — executes once, not twice
-    caching.release("index_delete")
-    dels = caching.track(
-        deleted_doc_ids.select(
-            F.col("doc_id").cast("bigint").alias("doc_id")
-        )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK),
-        key="index_delete",
-    )
-    if dels.count() <= broadcast_cap:
-        gone = dels.agg(F.array_sort(F.collect_list("doc_id")).alias("_gone"))
-        return (
-            index.join(F.broadcast(gone))
-            .select("word", F.array_except("doc_ids", "_gone").alias("doc_ids"))
-            .filter(F.size("doc_ids") > 0)
-            .select(
-                "word",
-                F.size("doc_ids").cast("long").alias("df"),
-                "doc_ids",
-            )
-        )
     kept = (
         index.select("word", F.explode("doc_ids").alias("doc_id"))
-        .join(dels, "doc_id", "left_anti")
+        .join(
+            deleted_doc_ids.select(F.col("doc_id").cast("bigint")),
+            "doc_id",
+            "left_anti",
+        )
         .groupBy("word")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("doc_ids"))
     )

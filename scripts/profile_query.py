@@ -5,7 +5,9 @@ frame), guide §1-style, so optimization effort lands on the phase that
 actually costs. Each run also prints its Janino compile count (the
 ``CodegenMetrics`` compilation count delta): a query that compiles on
 every warm run generates different Java source per call and pays the
-compile each time.
+compile each time. Each phase runs under its own job group, and the run
+prints the Spark jobs each group started (``jobs=BUILD/EXEC``): a
+builder that only plans shows ``jobs=0/...``.
 
 Usage: SPARK_GRAFT_SF_DIR=... python scripts/profile_query.py q1,q2 [runs]
 """
@@ -32,23 +34,32 @@ def main() -> None:
     spark = get_spark(app_name="profile")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    sc = spark.sparkContext
     qs = entrymod.queries()
     for name in names:
         fn = qs[name]
         for i in range(runs):
-            spark.sparkContext.setJobDescription(f"profile:{name}:{i}")
+            run = f"profile:{name}:{i}"
             c0 = codegen.METRIC_COMPILATION_TIME().getCount()
+            sc.setJobGroup(f"{run}:build", run)
             t0 = time.time()
             df = fn(spark, SF)
             t1 = time.time()
+            sc.setJobGroup(f"{run}:exec", run)
             df.write.format("noop").mode("overwrite").save()
             t2 = time.time()
+            sc._jsc.clearJobGroup()
             compiles = codegen.METRIC_COMPILATION_TIME().getCount() - c0
+            jobs = [
+                len(sc.statusTracker().getJobIdsForGroup(f"{run}:{phase}"))
+                for phase in ("build", "exec")
+            ]
             caching.release_unmemoized()
             spark._jvm.System.gc()
             print(
                 f"{name} run{i}: build={t1 - t0:6.2f}s exec={t2 - t1:6.2f}s "
-                f"total={t2 - t0:6.2f}s compiles={compiles}",
+                f"total={t2 - t0:6.2f}s compiles={compiles} "
+                f"jobs={jobs[0]}/{jobs[1]}",
                 flush=True,
             )
     spark.stop()

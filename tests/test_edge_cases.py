@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduceindex_spark.operators import dedup as D
@@ -578,48 +579,99 @@ def test_media_dhash_near_dups_rejects_band_breaking_threshold(spark):
     media_dhash_near_dups(docs, max_hamming=7)
 
 
-def test_index_delete_equals_full_rebuild(spark):
+_DELETE_DOCS = [
+    (1, "alpha beta"),
+    (2, "beta gamma shared"),
+    (3, "gamma solo"),
+    (4, "alpha beta gamma"),
+    (5, "shared"),
+    (10, "shared beta"),
+    (33, "alpha shared"),
+]
+
+
+@pytest.mark.parametrize(
+    "ids, id_type, kwargs",
+    [
+        ([3, 3, 99], "BIGINT", {}),  # 3 twice; 99 is absent
+        ([3, 3, 99], "BIGINT", {"broadcast_cap": 0}),  # ignored keyword
+        ([2, 4], "INT", {}),
+        ([], "BIGINT", {}),
+        ([d for d, _ in _DELETE_DOCS], "BIGINT", {}),
+        ([5], "BIGINT", {}),  # 'shared' keeps 2, 10, 33: numeric order
+    ],
+    ids=[
+        "duplicate_and_absent",
+        "broadcast_cap_0",
+        "int_ids",
+        "empty_delete_set",
+        "every_doc",
+        "numeric_order",
+    ],
+)
+def test_index_delete_equals_full_rebuild(spark, ids, id_type, kwargs):
     """delete(index(A), D) ≡ index(A − D), including dropping words whose
-    posting list empties and no-op on ids absent from the index."""
+    posting list empties, no-op on ids absent from the index or repeated
+    in D, and posting lists kept in numeric (not string) order."""
     from mapreduceindex_spark.operators.inverted_index import (
         index_delete,
         inverted_index,
     )
 
-    docs = _docs(
-        spark,
-        [
-            (1, "alpha beta"),
-            (2, "beta gamma"),
-            (3, "gamma solo"),
-            (4, "alpha beta gamma"),
-        ],
+    docs = spark.createDataFrame(_DELETE_DOCS, "doc_id BIGINT, text STRING")
+    gone = spark.createDataFrame([(i,) for i in ids], f"doc_id {id_type}")
+    index = inverted_index(docs, ordered=False)
+    edited_df = index_delete(index, gone, **kwargs)
+    rebuilt_df = inverted_index(
+        docs.filter(~F.col("doc_id").isin(ids)), ordered=False
     )
-    gone = spark.createDataFrame([(3,), (99,)], ["doc_id"])  # 99: absent
-    edited = sorted(
-        (r["word"], r["df"], tuple(r["doc_ids"]))
-        for r in index_delete(
-            inverted_index(docs, ordered=False), gone
-        ).collect()
+
+    def rows(df):
+        return sorted(
+            (r["word"], r["df"], tuple(r["doc_ids"])) for r in df.collect()
+        )
+
+    edited = rows(edited_df)
+    assert edited == rows(rebuilt_df)
+    assert [(f.name, f.dataType) for f in edited_df.schema.fields] == [
+        (f.name, f.dataType) for f in rebuilt_df.schema.fields
+    ]
+    postings = {w: doc_ids for w, _, doc_ids in edited}
+    if not ids:
+        assert edited == rows(index)
+    if 3 in ids:
+        # 'solo' existed only in doc 3 -> word dropped entirely
+        assert "solo" not in postings
+    if len(ids) == len(_DELETE_DOCS):
+        assert edited == []
+    if ids == [5]:
+        assert postings["shared"] == (2, 10, 33)
+
+
+def test_index_delete_planning_runs_no_job_and_caches_nothing(spark):
+    """Building the delete plan starts no Spark job (no count probe) and
+    registers no tracked cache: the delete set is scanned once, when the
+    returned plan runs."""
+    import uuid
+
+    from mapreduceindex_spark.functions import caching
+    from mapreduceindex_spark.operators.inverted_index import (
+        index_delete,
+        inverted_index,
     )
-    rebuilt = sorted(
-        (r["word"], r["df"], tuple(r["doc_ids"]))
-        for r in inverted_index(
-            docs.filter("doc_id NOT IN (3, 99)"), ordered=False
-        ).collect()
-    )
-    assert edited == rebuilt
-    # 'solo' existed only in doc 3 -> word dropped entirely
-    assert "solo" not in {w for w, _, _ in edited}
-    # the over-cap tier (explode + anti-join + re-aggregate) preserves the
-    # same invariant — broadcast_cap=0 forces it
-    joined = sorted(
-        (r["word"], r["df"], tuple(r["doc_ids"]))
-        for r in index_delete(
-            inverted_index(docs, ordered=False), gone, broadcast_cap=0
-        ).collect()
-    )
-    assert joined == rebuilt
+
+    docs = _docs(spark, [(i, f"w{i} common") for i in range(1, 8)])
+    gone = spark.createDataFrame([(i,) for i in range(1, 5)], "doc_id BIGINT")
+    idx = inverted_index(docs, ordered=False)
+    sc = spark.sparkContext
+    group = f"index_delete_plan_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "index_delete planning")
+    try:
+        index_delete(idx, gone)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert "index_delete" not in caching._LIVE
 
 
 def test_asof_bucket_sizing_and_hot_user_guard(spark):
@@ -688,10 +740,11 @@ def test_tracked_caches_bounded_across_invocations(spark):
 
 
 def test_index_delete_plan_is_distributed(spark):
-    """Neither tier may embed the delete set as a literal expression tree
+    """The delete set must not be embedded as a literal expression tree
     (r03 verdict: a collected literal array blows codegen limits long
-    before memory). Broadcast tier: a broadcast join and an array_except,
-    no literal array of ids. Join tier: a left-anti join, no cartesian."""
+    before memory): the plan is a left-anti join, with no cartesian
+    product and no literal array of ids — with or without the ignored
+    ``broadcast_cap`` keyword."""
     from mapreduceindex_spark.operators.inverted_index import (
         index_delete,
         inverted_index,
@@ -701,20 +754,17 @@ def test_index_delete_plan_is_distributed(spark):
     gone = spark.createDataFrame([(i,) for i in range(1, 5)], ["doc_id"])
     idx = inverted_index(docs, ordered=False)
 
-    bplan = index_delete(idx, gone)._jdf.queryExecution().executedPlan().toString()
-    assert "array_except" in bplan
-    assert "Broadcast" in bplan
-    # the ids 1..4 must not appear as an [1, 2, 3, 4]-style literal
-    assert "[1, 2, 3, 4]" not in bplan
-
-    jplan = (
-        index_delete(idx, gone, broadcast_cap=0)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "LeftAnti" in jplan
-    assert "CartesianProduct" not in jplan
+    for kwargs in ({}, {"broadcast_cap": 0}):
+        plan = (
+            index_delete(idx, gone, **kwargs)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        assert "LeftAnti" in plan
+        assert "CartesianProduct" not in plan
+        # the ids 1..4 must not appear as an [1, 2, 3, 4]-style literal
+        assert "[1, 2, 3, 4]" not in plan
 
 
 def test_phrase_search_consecutive_and_normalized(spark):
