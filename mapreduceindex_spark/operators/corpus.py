@@ -876,7 +876,7 @@ def curation_funnel(
     # clone-collapse frame IS exact dedup — one cached aggregate gives
     # both the raw count (Σ|members|) and the distinct-content count,
     # so the funnel never re-scans the corpus for the first two gates
-    groups, _sh, _stats = _pair_front_end(documents, n)
+    groups = _pair_front_end(documents, n).groups
     raw = groups.agg(
         F.coalesce(F.sum(F.size("members")), F.lit(0))
         .cast("long")

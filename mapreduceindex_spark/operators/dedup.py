@@ -26,14 +26,18 @@ DuckDB oracle recomputes it bit-for-bit); swap in ``F.xxhash64`` for
 cheaper hashing when cross-engine auditability is not required.
 
 **Laziness caveat**: the adaptive operators here are NOT fully lazy —
-``ngram_jaccard_pairs`` (Σ df² tier probe), ``near_dup_clusters``
-(clone-group census) and ``resolve_components`` (edge-count tier probe)
-run small bounded Spark jobs at *call* time to pick an execution tier,
-so building the DataFrame already costs a few scans. The probed values
-are scalars (counts), never data collections.
+``ngram_jaccard_pairs`` (Σ df² tier probe) and ``near_dup_clusters``
+(clone-group census) run small bounded Spark jobs at *call* time to
+pick an execution tier, so building the DataFrame already costs a few
+scans; those probes collect scalars (counts). ``resolve_components``
+is the exception that collects data: it reads at most
+``driver_max_edges + 1`` edges, and the edge list itself decides the
+tier (and, when it fits, is the driver tier's input).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -51,6 +55,12 @@ from mapreduceindex_spark.functions.text import (
 #: runs in native BIGINT on every engine (a 2^61 modulus needs 128-bit
 #: intermediates: decimal(38) in Spark ≈ 5× slower than long math, measured).
 MINHASH_PRIME = (1 << 31) - 1
+
+#: Pair-search defaults shared by the public operators and the internal
+#: compositions: the hot-shingle df cap and the Σdf² budget of the
+#: direct-join tier (basis in ``ngram_jaccard_pairs``).
+MAX_SHINGLE_DF = 1000
+DIRECT_JOIN_MAX_DF2 = 50_000_000
 
 
 def _affine_coeffs(k: int) -> list[tuple[int, int]]:
@@ -156,8 +166,8 @@ def ngram_jaccard_pairs(
     documents: DataFrame,
     n: int = 3,
     threshold: float = 0.5,
-    max_shingle_df: int = 1000,
-    direct_join_max_df2: int = 50_000_000,
+    max_shingle_df: int = MAX_SHINGLE_DF,
+    direct_join_max_df2: int = DIRECT_JOIN_MAX_DF2,
 ) -> DataFrame:
     """Exact pairwise n-gram Jaccard similarity ≥ threshold. Output:
     (doc_a, doc_b, jaccard), a < b.
@@ -208,29 +218,13 @@ def ngram_jaccard_pairs(
     all-docs join (the shingle-df cap then counts *unique* contents,
     which is also the principled reading of "df").
     """
-    from mapreduceindex_spark.functions import caching
-
     caching.release("ngram_jaccard_pairs")
     front = _pair_front_end(documents, n)
-    groups, sh, stats = front
-    return _clone_collapsed_pairs(
-        documents,
-        n,
-        threshold,
-        lambda reps: _jaccard_rep_pairs(
-            reps,
-            n,
-            threshold,
-            max_shingle_df,
-            direct_join_max_df2,
-            sh=sh,
-            track_key="ngram_jaccard_pairs",
-            sdf=front.sdf,
-            front_fp=front.fingerprint,
-        ),
-        groups=groups,
-        clone_stats=stats,
+    core = _jaccard_rep_pairs(
+        front, threshold, max_shingle_df, direct_join_max_df2,
+        track_key="ngram_jaccard_pairs",
     )
+    return _clone_collapsed_pairs(documents, front, core, threshold)
 
 
 def _md5_clone_groups(documents: DataFrame) -> DataFrame:
@@ -253,42 +247,38 @@ def _md5_clone_groups(documents: DataFrame) -> DataFrame:
 #: even when an external clearCache forces the FRAMES to rebuild.
 _FRONT_STATS: dict[str, tuple[int, int]] = caching.scalar_memo({})
 
-#: Σdf² tier-probe scalars keyed ``fingerprint|max_shingle_df`` — the
-#: same pure-function-of-the-input argument as ``_FRONT_STATS``; entries
-#: for stale fingerprints are pruned on access so the dict stays bounded
-#: to the one live front end.
+#: single-slot cache of the Σdf² tier probe keyed
+#: ``fingerprint|max_shingle_df`` — the same pure-function-of-the-input
+#: argument as ``_FRONT_STATS``.
 _FRONT_PRESSURE: dict[str, int] = caching.scalar_memo({})
 
 
-class _FrontEnd(tuple):
-    """The 3-tuple ``(groups, sh, stats)`` every existing caller
-    unpacks, extended with the round-10 shared members: ``sdf`` (the
-    memoized shingle-df frame over ``sh``) and ``fingerprint`` (the
-    memo key — callers thread it to :func:`_jaccard_rep_pairs` so the
-    Σdf² tier probe is computed once per front end, not once per
-    query)."""
+class _FrontEnd(NamedTuple):
+    """The pair family's memoized front end (see :func:`_pair_front_end`):
+    the clone-collapse ``groups``, the rep-level shingle frame ``sh``,
+    its shingle-df frame ``sdf``, the clone census ``stats`` =
+    (n_groups, n_docs) and the memo ``fingerprint`` that keys the
+    family's driver-side scalars and signature memo."""
 
+    groups: DataFrame
+    sh: DataFrame
     sdf: DataFrame
+    stats: tuple[int, int]
     fingerprint: str
 
-    def __new__(cls, groups, sh, stats, sdf, fingerprint):
-        obj = super().__new__(cls, (groups, sh, stats))
-        obj.sdf = sdf
-        obj.fingerprint = fingerprint
-        return obj
 
-
-def _pair_front_end(
-    documents: DataFrame, n: int = 3
-) -> tuple[DataFrame, DataFrame, tuple[int, int]]:
-    """The pair-family's shared, memoized front end: ``(groups, sh,
-    (n_groups, n_docs))`` where ``groups`` is the md5 clone-collapse
-    frame (:func:`_md5_clone_groups`) and ``sh`` the hashed-shingle
-    frame over one REPRESENTATIVE per distinct content.
+def _pair_front_end(documents: DataFrame, n: int = 3) -> _FrontEnd:
+    """The pair family's shared, memoized front end — the only input of
+    the pair cores (:func:`_jaccard_rep_pairs`,
+    :func:`_minhash_lsh_rep_pairs`) and of the clone expansion
+    (:func:`_clone_collapsed_pairs`). ``groups`` is the md5
+    clone-collapse frame (:func:`_md5_clone_groups`), ``sh`` the
+    hashed-shingle frame over one REPRESENTATIVE per distinct content
+    and ``sdf`` its per-shingle df.
 
     Every composition in the near-dup family (pair search, clustering,
     canonical selection, recall/banding/threshold calibration, leakage
-    split) starts with exactly these two frames; before r10 each public
+    split) starts with exactly these frames; before r10 each public
     operator built and tracked its own copy, so a composition like
     ``canonical_docs`` → ``curation_funnel`` paid the clone-group scan
     + shingle window once per embedded operator (r09 VERDICT: the
@@ -304,8 +294,6 @@ def _pair_front_end(
     ``sh`` covers representatives only; on a duplicate-free corpus the
     rep semi-join is the identity, so it covers every document.
     """
-    from mapreduceindex_spark.functions import caching
-
     fingerprint = f"{caching.plan_fingerprint(documents)}|{n}"
 
     def _build():
@@ -345,63 +333,35 @@ def _pair_front_end(
         stats = (row["_g"], row["_d"] or 0)
         _FRONT_STATS.clear()  # single slot, same bound as the memo
         _FRONT_STATS[fingerprint] = stats
-    return _FrontEnd(groups, sh, stats, sdf, fingerprint)
+    return _FrontEnd(groups, sh, sdf, stats, fingerprint)
 
 
 def _clone_collapsed_pairs(
     documents: DataFrame,
-    n: int,
+    front: _FrontEnd,
+    core: DataFrame,
     threshold: float,
-    core_fn,
-    groups: DataFrame | None = None,
-    clone_stats: tuple[int, int] | None = None,
-    track_key: str | None = None,
 ) -> DataFrame:
     """Exact-dup pre-collapse shared by the pairwise similarity operators.
 
-    ``core_fn(rep_docs) → (doc_a, doc_b, jaccard)`` runs on one
-    representative per distinct content; byte-identical groups re-expand
-    as jaccard-1.0 intra pairs and fan out over cross-group pairs. Output
-    is identical to running the core on the full corpus for any core
-    whose verdict depends only on the shingle set: clone members carry
-    identical sets, hence identical jaccard, signatures, and LSH bands
-    (so for the banded core, a member pairs iff its rep pairs).
-
-    A caller composing several cores (``lsh_recall``) passes a prebuilt
-    persisted ``groups`` frame (and optionally the already-collected
-    ``clone_stats`` = (n_groups, n_docs), skipping the per-leg probe
-    job) so the md5 collapse scan runs once per composition; the caller
-    then owns the frame's lifecycle.
+    ``core`` is a pair core's ``(doc_a, doc_b, jaccard)`` frame over the
+    front end's representatives (one per distinct content of
+    ``documents``); byte-identical groups re-expand as jaccard-1.0 intra
+    pairs and fan out over cross-group pairs. Output is identical to
+    running the core on the full corpus for any core whose verdict
+    depends only on the shingle set: clone members carry identical sets,
+    hence identical jaccard, signatures, and LSH bands (so for the banded
+    core, a member pairs iff its rep pairs). On a duplicate-free corpus
+    (by the front end's clone census) the expansion is the identity and
+    ``core`` is returned as is, ordered.
     """
-    owned = groups is None
-    if groups is None:
-        groups = _md5_clone_groups(documents).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        if track_key:
-            # registered under the PUBLIC operator's key: the non-dup-
-            # free path returns a lazy plan consuming this frame, so it
-            # cannot unpersist here — tracking makes the NEXT call (or
-            # an explicit release) free it instead of leaking it
-            from mapreduceindex_spark.functions import caching
-
-            caching.track(groups, track_key)
-    if clone_stats is None:
-        row = groups.agg(
-            F.count(F.lit(1)).alias("_g"),
-            F.sum(F.size("members")).alias("_d"),
-        ).collect()[0]
-        clone_stats = (row["_g"], row["_d"])
-    if clone_stats[0] == clone_stats[1]:
-        # duplicate-free corpus: collapse/expansion would be identity —
-        # run the core directly
-        if owned:
-            groups.unpersist()
-        return core_fn(documents).orderBy("doc_a", "doc_b")
+    n_groups, n_docs = front.stats
+    if n_groups == n_docs:
+        return core.orderBy("doc_a", "doc_b")
+    groups = front.groups
     rep_docs = documents.join(
         groups.select(F.col("rep").alias("doc_id")), "doc_id", "left_semi"
     )
-    core = core_fn(rep_docs)
     # shingle-bearing reps only: zero-word docs have no shingles, so the
     # brute-force join emits no pairs for them — intra expansion must not.
     # "has ≥1 shingle" ⟺ "has ≥1 normalized word" (the short-doc rule
@@ -442,62 +402,38 @@ def _clone_collapsed_pairs(
 
 
 def _jaccard_rep_pairs(
-    documents: DataFrame,
-    n: int,
+    front: _FrontEnd,
     threshold: float,
     max_shingle_df: int,
     direct_join_max_df2: int,
-    sh: DataFrame | None = None,
-    track_key: str | None = None,
-    sdf: DataFrame | None = None,
-    front_fp: str | None = None,
+    track_key: str,
 ) -> DataFrame:
-    """Pairwise jaccard over an already-exact-deduped corpus — the two-tier
-    core described in ``ngram_jaccard_pairs``. A composing caller
-    (``lsh_recall``) passes a prebuilt persisted ``sh`` frame so the
-    shingle front end is scanned once across legs; the caller owns it.
-    ``track_key`` registers this call's own persists (sh/sdf/ranked)
-    under the PUBLIC operator's caching key, so a repeat invocation
+    """Pairwise jaccard over the front end's representatives — the
+    two-tier core described in ``ngram_jaccard_pairs``, read off the
+    memoized ``sh`` and ``sdf`` frames (:func:`_pair_front_end`). The
+    prefix tier persists one frame of its own (``ranked``), tracked
+    under the PUBLIC operator's ``track_key`` so a repeat invocation
     releases its predecessor's blocks instead of leaking them for the
     session's lifetime (the tracked-caching discipline)."""
-    from mapreduceindex_spark.functions import caching
-
-    def _t(df):
-        return caching.track(df, track_key) if track_key else df
-
-    if sh is None:
-        sh = _t(
-            _shingle_hashes(documents, n).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-        )
-    if sdf is None:
-        sdf = _t(
-            sh.groupBy("sh").agg(F.count(F.lit(1)).alias("sdf")).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-        )
+    sh, sdf = front.sh, front.sdf
     capped = sh.join(sdf.filter(F.col("sdf") <= max_shingle_df), "sh")
     # Adaptive tier switch, same shape as near_dup_clusters: Σ df² is the
     # exact row count of the direct self-join. While it is modest, the
     # direct join wins (no extra window/shuffle); past the budget, prefix
     # filtering's candidate collapse is what keeps the query feasible.
-    # The probe is a pure function of (front end, cap) — callers that
-    # thread the memoized front end's fingerprint pay it once per front
-    # end instead of once per query (_FRONT_PRESSURE).
-    pkey = f"{front_fp}|{max_shingle_df}" if front_fp else None
-    pressure = _FRONT_PRESSURE.get(pkey) if pkey else None
+    # The probe is a pure function of (front end, cap), so it is paid
+    # once per front end instead of once per query (_FRONT_PRESSURE).
+    pkey = f"{front.fingerprint}|{max_shingle_df}"
+    pressure = _FRONT_PRESSURE.get(pkey)
     if pressure is None:
-        pressure = (
+        pressure = int(
             sdf.filter(F.col("sdf") <= max_shingle_df)
             .agg(F.sum(F.col("sdf") * F.col("sdf")))
             .collect()[0][0]
             or 0
         )
-        if pkey:
-            for k in [k for k in _FRONT_PRESSURE if not k.startswith(f"{front_fp}|")]:
-                del _FRONT_PRESSURE[k]
-            _FRONT_PRESSURE[pkey] = int(pressure)
+        _FRONT_PRESSURE.clear()  # single slot, same bound as the memo
+        _FRONT_PRESSURE[pkey] = pressure
     if pressure <= direct_join_max_df2:
         # direct tier: count-based intersection — the groupBy-count of the
         # self-join rows beats collect_set + array_intersect while the
@@ -539,13 +475,14 @@ def _jaccard_rep_pairs(
     from pyspark.sql.window import Window
 
     by_doc = Window.partitionBy("doc_id")
-    ranked = _t(
+    ranked = caching.track(
         capped.select(
             "doc_id",
             "sh",
             F.row_number().over(by_doc.orderBy("sdf", "sh")).alias("rk"),
             F.count(F.lit(1)).over(by_doc).alias("n_sh"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        ).persist(StorageLevel.MEMORY_AND_DISK),
+        track_key,
     )
     # ceil guarded against float error pushing the prefix too short
     # (shorter prefix = lost pairs; a hair longer only costs candidates)
@@ -661,26 +598,23 @@ def _signatures_from_hashes(sh: DataFrame, num_hashes: int) -> DataFrame:
     return reduced.groupBy("doc_id").agg(*aggs)
 
 
-def _front_signatures(
-    sh: DataFrame, num_hashes: int, front_fp: str
-) -> DataFrame:
+def _front_signatures(front: _FrontEnd, num_hashes: int) -> DataFrame:
     """Memoized rep-level signature frame over the family front end's
     shingle frame — the fourth shared member the r09 VERDICT named
     (clone groups → shingles → signatures): the LSH pair core, the
     accuracy scorer, and the band sweep each rebuilt the same
     one-shuffle 16-min aggregate per query. Keyed on the front-end
     fingerprint + num_hashes; one live cache set."""
-    from mapreduceindex_spark.functions import caching
 
     def _build() -> list:
         return [
-            _signatures_from_hashes(sh, num_hashes).persist(
+            _signatures_from_hashes(front.sh, num_hashes).persist(
                 StorageLevel.MEMORY_AND_DISK
             )
         ]
 
     return caching.memo(
-        "dedup_sigs", f"{front_fp}|{num_hashes}", _build
+        "dedup_sigs", f"{front.fingerprint}|{num_hashes}", _build
     )[0]
 
 
@@ -720,62 +654,24 @@ def minhash_lsh_pairs(
     them first changes nothing in the output while removing the clone-
     group hot buckets (measured 4× at a 10×-clone corpus).
     """
-    from mapreduceindex_spark.functions import caching
-
-    caching.release("minhash_lsh_pairs")
     front = _pair_front_end(documents, n)
-    groups, sh, stats = front
-    return _clone_collapsed_pairs(
-        documents,
-        n,
-        threshold,
-        lambda reps: _minhash_lsh_rep_pairs(
-            reps,
-            n,
-            num_hashes,
-            bands,
-            threshold,
-            sh=sh,
-            track_key="minhash_lsh_pairs",
-            front_fp=front.fingerprint,
-        ),
-        groups=groups,
-        clone_stats=stats,
-    )
+    core = _minhash_lsh_rep_pairs(front, num_hashes, bands, threshold)
+    return _clone_collapsed_pairs(documents, front, core, threshold)
 
 
 def _minhash_lsh_rep_pairs(
-    documents: DataFrame,
-    n: int,
+    front: _FrontEnd,
     num_hashes: int,
     bands: int,
     threshold: float,
-    sh: DataFrame | None = None,
-    track_key: str | None = None,
-    front_fp: str | None = None,
 ) -> DataFrame:
-    """Banded-LSH candidate join + exact verification over an already
-    exact-deduped corpus — the core described in ``minhash_lsh_pairs``.
-    ``sh`` may be a prebuilt persisted shingle frame and ``track_key``
-    the public operator's caching key (see ``_jaccard_rep_pairs``);
-    ``front_fp`` routes the signature aggregate through the memoized
-    family frame (:func:`_front_signatures`)."""
-    from mapreduceindex_spark.functions import caching
-
+    """Banded-LSH candidate join + exact verification over the front
+    end's representatives — the core described in ``minhash_lsh_pairs``.
+    The memoized shingle frame ``sh`` feeds both the signatures (the
+    memoized :func:`_front_signatures`) and the verification sets; the
+    core persists nothing of its own."""
     rows_per_band = num_hashes // bands
-    # One persisted copy of the hashed pairs feeds the signature build AND
-    # the verification sets — the md5+explode front end runs exactly once.
-    if sh is None:
-        sh = _shingle_hashes(documents, n).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        if track_key:
-            caching.track(sh, track_key)
-    sig = (
-        _front_signatures(sh, num_hashes, front_fp)
-        if front_fp
-        else _signatures_from_hashes(sh, num_hashes)
-    )
+    sig = _front_signatures(front, num_hashes)
     band_cols = [
         F.md5(
             F.concat_ws(
@@ -805,7 +701,7 @@ def _minhash_lsh_rep_pairs(
         )
         .distinct()
     )
-    shsets = sh.groupBy("doc_id").agg(F.collect_set("sh").alias("hs"))
+    shsets = front.sh.groupBy("doc_id").agg(F.collect_set("sh").alias("hs"))
     sa = shsets.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("ha"))
     sb = shsets.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hb"))
     inter = F.size(F.array_intersect("ha", "hb"))
@@ -872,21 +768,19 @@ def near_dup_clusters(
     # edges per group instead of |members|·(|members|−1)/2 — at a 10×
     # clone factor that is 9 edges vs 45 per group, and the pair source
     # itself runs on the collapsed (unique-content) corpus.
-    from mapreduceindex_spark.functions import caching
-
     caching.release("near_dup_clusters")
     front = _pair_front_end(documents, n)
-    groups, sh, gstats = front
+    n_groups, n_docs = front.stats
     if candidates == "auto":
         # the clone census already carries the corpus size (Σ|members|) —
         # no separate count() scan for the tier probe
-        candidates = "lsh" if gstats[1] > lsh_min_docs else "exact"
+        candidates = "lsh" if n_docs > lsh_min_docs else "exact"
     if candidates not in ("exact", "lsh"):
         raise ValueError(f"near_dup_clusters: unknown candidates {candidates!r}")
-    if gstats[0] == gstats[1] or threshold > 1.0:
-        rep_docs = documents
+    if n_groups == n_docs or threshold > 1.0:
         star = None
     else:
+        groups = front.groups
         rep_docs = documents.join(
             groups.select(F.col("rep").alias("doc_id")), "doc_id", "left_semi"
         )
@@ -907,21 +801,14 @@ def near_dup_clusters(
         )
     if candidates == "exact":
         pair_df = _jaccard_rep_pairs(
-            rep_docs, n, threshold, max_shingle_df=1000,
-            direct_join_max_df2=50_000_000, sh=sh,
+            front, threshold, MAX_SHINGLE_DF, DIRECT_JOIN_MAX_DF2,
             track_key="near_dup_clusters",
-            sdf=front.sdf, front_fp=front.fingerprint,
         )
     else:
-        # rep_docs is already exact-deduped — run the banded core
-        # directly on the shared shingle frame (calling the public
-        # minhash_lsh_pairs here would re-enter the memo with a
-        # DIFFERENT input plan and thrash the single-slot front end)
-        pair_df = _minhash_lsh_rep_pairs(
-            rep_docs, n, 16, 4, threshold, sh=sh,
-            track_key="near_dup_clusters",
-            front_fp=front.fingerprint,
-        )
+        # the banded core runs on the front end's representatives
+        # directly: the star edges already connect every clone to its
+        # rep, so no pair expansion is needed
+        pair_df = _minhash_lsh_rep_pairs(front, 16, 4, threshold)
     pair_df = pair_df.select("doc_a", "doc_b")
     if star is not None:
         pair_df = pair_df.union(star)
@@ -947,13 +834,20 @@ def resolve_components(
     driver union-find below ``driver_max_edges`` edges, distributed
     min-label propagation (converge-or-raise) above.
     """
-    from mapreduceindex_spark.functions import caching
-
     caching.release("resolve_components")
+    # persisted so the distributed tier does not recompute the pairs the
+    # bounded collect below already evaluated
     pairs = pair_df.select("doc_a", "doc_b").persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    if pairs.count() <= driver_max_edges:
+    # one bounded read decides the tier AND is the driver tier's input:
+    # at most driver_max_edges rows means the whole edge list is here
+    edge_list = pairs.limit(driver_max_edges + 1).collect()
+    if len(edge_list) <= driver_max_edges:
+        # the driver tier's result depends only on the collected edge
+        # list from here on — release the cached pair blocks so repeated
+        # cluster resolutions in one session don't accumulate them
+        pairs.unpersist()
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -962,11 +856,6 @@ def resolve_components(
                 x = parent[x]
             return x
 
-        edge_list = pairs.collect()
-        # the driver tier's result depends only on the collected edge
-        # list from here on — release the cached pair blocks so repeated
-        # cluster resolutions in one session don't accumulate them
-        pairs.unpersist()
         for a, b in edge_list:
             ra, rb = find(a), find(b)
             if ra != rb:
@@ -1479,9 +1368,8 @@ def minhash_accuracy(
     """
     pairs = minhash_lsh_pairs(documents, n, num_hashes, bands, threshold)
     front = _pair_front_end(documents, n)
-    groups, sh, _stats = front
-    rep_sigs = _front_signatures(sh, num_hashes, front.fingerprint)
-    docmap = groups.select(
+    rep_sigs = _front_signatures(front, num_hashes)
+    docmap = front.groups.select(
         F.explode("members").alias("doc_id"), F.col("rep")
     )
     sigs = docmap.join(
@@ -1588,7 +1476,7 @@ def incremental_dedup(
     # to a per-GROUP decision expanded through the members array. No
     # corpus scan remains outside the shared memo.
     front = _pair_front_end(documents, n)
-    groups, sh_reps, _stats = front
+    groups, sh_reps = front.groups, front.sh
 
     is_delta_m = lambda m: m % delta_mod == delta_mod - 1  # noqa: E731
     gsplit = groups.select(
@@ -1615,7 +1503,7 @@ def incremental_dedup(
         F.col("rep").alias("doc_id"), F.col("_bmin").alias("_b")
     )
 
-    sig = _front_signatures(sh_reps, num_hashes, front.fingerprint)
+    sig = _front_signatures(front, num_hashes)
     rows_per_band = num_hashes // bands
     band_cols = [
         F.md5(
@@ -1702,7 +1590,7 @@ def containment_pairs(
     documents: DataFrame,
     n: int = 3,
     threshold_ppm: int = 600_000,
-    max_shingle_df: int = 1000,
+    max_shingle_df: int = MAX_SHINGLE_DF,
 ) -> DataFrame:
     """Asymmetric shingle containment C(a→b) = |S_a ∩ S_b| / |S_a| ≥
     threshold — the near-dup lens Jaccard is blind to: a short document
@@ -1746,7 +1634,7 @@ def containment_pairs(
     # then count) left exactly one vote per content — which is exactly
     # what the rep-only shingle frame counts.
     front = _pair_front_end(documents, n)
-    groups, sh_reps, fstats = front
+    groups, sh_reps = front.groups, front.sh
     docmap = groups.select(
         F.explode("members").alias("doc_id"), F.col("rep")
     )
@@ -1808,7 +1696,7 @@ def containment_pairs(
     # is material; measured at sf0.1 (8 dupes/5000): direct 2.4 s vs
     # collapsed 4.9 s, while at 10x clones the collapse is the
     # difference between Σdf²·100 and output-proportional (4.6 s).
-    n_groups, n_docs = fstats
+    n_groups, n_docs = front.stats
     if n_docs - n_groups <= n_groups // 20:
         sh_all = docmap.join(
             sh_reps.withColumnRenamed("doc_id", "rep"), "rep"
@@ -1909,39 +1797,27 @@ def lsh_recall(
     Still exactly one cache set for this operator; a changed input
     releases and rebuilds.
     """
-    from mapreduceindex_spark.functions import caching
-
     # two caching keys: "dedup_front" holds the FAMILY-shared memoized
-    # [groups, sh] pair (released only on an input-fingerprint change —
-    # NEVER here, or the memo would be voided); "lsh_recall_pairs"
-    # holds the legs' per-call persists (sdf/ranked), released per call
-    # like any other operator's
+    # front end (released only on an input-fingerprint change — NEVER
+    # here, or the memo would be voided); "lsh_recall_pairs" holds the
+    # exact leg's per-call persist (the prefix tier's ``ranked``),
+    # released per call like any other operator's
     caching.release("lsh_recall_pairs")
     front = _pair_front_end(documents, n)
-    groups, sh, clone_stats = front
     truth = _clone_collapsed_pairs(
         documents,
-        n,
-        threshold,
-        lambda r: _jaccard_rep_pairs(
-            r, n, threshold, 1000, 50_000_000, sh=sh,
+        front,
+        _jaccard_rep_pairs(
+            front, threshold, MAX_SHINGLE_DF, DIRECT_JOIN_MAX_DF2,
             track_key="lsh_recall_pairs",
-            sdf=front.sdf, front_fp=front.fingerprint,
         ),
-        groups=groups,
-        clone_stats=clone_stats,
+        threshold,
     ).select("doc_a", "doc_b")
     found = _clone_collapsed_pairs(
         documents,
-        n,
+        front,
+        _minhash_lsh_rep_pairs(front, num_hashes, bands, threshold),
         threshold,
-        lambda r: _minhash_lsh_rep_pairs(
-            r, n, num_hashes, bands, threshold, sh=sh,
-            track_key="lsh_recall_pairs",
-            front_fp=front.fingerprint,
-        ),
-        groups=groups,
-        clone_stats=clone_stats,
     ).select("doc_a", "doc_b", F.lit(1).alias("_hit"))
     marked = truth.join(found, ["doc_a", "doc_b"], "left").select(
         F.coalesce("_hit", F.lit(0)).alias("_hit")
@@ -2249,25 +2125,20 @@ def lsh_band_sweep(
     """
     from functools import reduce as _reduce
 
-    from mapreduceindex_spark.functions import caching
-
     caching.release("lsh_band_sweep")
     for b in bands_list:
         assert num_hashes % b == 0, (b, num_hashes)
     front = _pair_front_end(documents, n)
-    groups, sh_reps, clone_stats = front
-    sig_reps = _front_signatures(sh_reps, num_hashes, front.fingerprint)
+    groups = front.groups
+    sig_reps = _front_signatures(front, num_hashes)
     truth = _clone_collapsed_pairs(
         documents,
-        n,
-        threshold,
-        lambda r: _jaccard_rep_pairs(
-            r, n, threshold, 1000, 50_000_000, sh=sh_reps,
+        front,
+        _jaccard_rep_pairs(
+            front, threshold, MAX_SHINGLE_DF, DIRECT_JOIN_MAX_DF2,
             track_key="lsh_band_sweep",
-            sdf=front.sdf, front_fp=front.fingerprint,
         ),
-        groups=groups,
-        clone_stats=clone_stats,
+        threshold,
     ).select("doc_a", "doc_b")
     # slim (doc → rep) map instead of a per-doc 17-column signature
     # expansion: clones carry their rep's signature by the collapse

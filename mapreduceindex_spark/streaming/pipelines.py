@@ -999,11 +999,11 @@ def streaming_lsh_dedup_pairs(
     from mapreduceindex_spark.operators.dedup import _pair_front_end
 
     docs = load_table(spark, sf_dir, "documents")
-    groups, sh_reps, _stats = _pair_front_end(docs, n)
-    docmap = groups.select(
+    front = _pair_front_end(docs, n)
+    docmap = front.groups.select(
         F.explode("members").alias("doc_id"), F.col("rep")
     )
-    shsets = sh_reps.groupBy("doc_id").agg(
+    shsets = front.sh.groupBy("doc_id").agg(
         F.collect_set("sh").alias("hs")
     ).withColumnRenamed("doc_id", "rep")
     sa = docmap.join(shsets, "rep").select(

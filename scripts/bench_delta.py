@@ -10,12 +10,16 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import sys
+
+#: the checkout this script lives in — its BENCH_SELF records are compared
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
     threshold = float(sys.argv[1]) if len(sys.argv) > 1 else 1.4
-    paths = sorted(glob.glob("/root/repo/BENCH_SELF_r*.json"))
+    paths = sorted(glob.glob(os.path.join(REPO, "BENCH_SELF_r*.json")))
     if len(paths) < 2:
         print(f"need two records, have {paths}")
         return

@@ -17,10 +17,12 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+#: the checkout this script lives in — it runs that tree's code
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = os.environ.get("PLANS_OUT", "/root/repo/plans/r11")
+OUT = os.environ.get("PLANS_OUT", os.path.join(REPO, "plans", "r11"))
 
 
 def main() -> None:

@@ -6,12 +6,15 @@ reference's committed golden outputs — including 0-byte empties.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 import tempfile
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+#: the checkout this script lives in — it runs that tree's code
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from mapreduceindex_spark.operators.inverted_index import inverted_index
 from mapreduceindex_spark.session import get_spark

@@ -7,15 +7,18 @@ and pruned read schemas — and flags the anti-patterns (CartesianProduct,
 row-at-a-time PythonUDF in a hot path). The full formatted plan of the
 flagship is included verbatim.
 
-Usage: python scripts/plan_report.py   (writes /root/repo/PLANS.md)
+Usage: python scripts/plan_report.py   (writes PLANS.md at the repo root)
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+#: the checkout this script lives in — it runs that tree's code
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF = "/root/testdata/sf0.01"
 
@@ -116,7 +119,7 @@ def main() -> None:
         "```",
         "",
     ]
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(lines))
     bad = [(n, a) for n, a in rows if a["cartesian"] or a["python_udf_rows"]]
     print("PLANS.md written;", "CLEAN" if not bad else f"ANTI-PATTERNS: {bad}")

@@ -18,7 +18,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+#: the checkout this script lives in — it runs that tree's code
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

@@ -29,12 +29,14 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+#: the checkout this script lives in — it runs that tree's code
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SRC = "/root/testdata/sf0.1"
 DST = os.environ.get("SCALE_DIR", "/tmp/scale_sf1")
 REPS = int(os.environ.get("SCALE_REPS", "10"))
-OUT = "/root/repo/plans/r11/SCALE_BENCH_r11.json"
+OUT = os.path.join(REPO, "plans", "r11", "SCALE_BENCH_r11.json")
 
 QUERIES = [
     "ngram_jaccard_pairs",

@@ -9,10 +9,13 @@ Usage: python scripts/stress_clones.py [clone_factor]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+#: the checkout this script lives in — it runs that tree's code
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 

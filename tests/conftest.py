@@ -25,6 +25,31 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def batch_query_plans(spark):
+    """Every batch ``queries()`` entry built once on the sf0.001 tables,
+    its executed plan fixed right after its build, as ``{name: df}``.
+
+    The registry-wide plan audits (``test_plan_lint``,
+    ``test_plan_properties``) read only these plans. Building a query can
+    run Spark jobs of its own (probes, eager stages), so one shared build
+    halves the audits' cost. The plan is fixed at build time because a
+    later query's build may release a cache this plan reads: a plan
+    planned after that would show the recomputed lineage instead.
+    Streaming queries are left out: building them runs the stream.
+    """
+    import __spark_entry__ as entrymod
+
+    frames = {}
+    for name, fn in entrymod.queries().items():
+        if name.startswith("streaming_"):
+            continue
+        df = fn(spark, SF_SMALL)
+        df._jdf.queryExecution().executedPlan()
+        frames[name] = df
+    return frames
+
+
+@pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()
     for t in TABLES:

@@ -153,6 +153,33 @@ def test_cluster_tiers_agree(spark):
     assert small == large
     assert small[0] == (1, 1) and small[1] == (2, 1)
 
+    # The tier boundary of the bounded edge collect: k edges run on the
+    # driver at driver_max_edges=k and distributed at k-1 (the
+    # distributed tier tracks its labels frame; the driver tier caches
+    # nothing).
+    from mapreduceindex_spark.functions import caching
+
+    edges = [(1, 2), (2, 3), (5, 6), (8, 7)]
+    pair_df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    ids = spark.createDataFrame([(i,) for i in range(1, 10)], "doc_id long")
+    k = len(edges)
+    driver = sorted(
+        tuple(r)
+        for r in D.resolve_components(pair_df, ids, driver_max_edges=k).collect()
+    )
+    assert "resolve_components" not in caching._LIVE
+    dist = sorted(
+        tuple(r)
+        for r in D.resolve_components(
+            pair_df, ids, driver_max_edges=k - 1
+        ).collect()
+    )
+    assert len(caching._LIVE["resolve_components"]) == 1
+    caching.release("resolve_components")
+    assert driver == dist == [
+        (1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 5), (7, 7), (8, 7), (9, 9)
+    ]
+
 
 def test_tf_idf_single_doc_is_zero(spark):
     # idf = ln(1/1) = 0 for every word when the corpus is one doc.

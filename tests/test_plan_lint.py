@@ -127,15 +127,13 @@ def test_plan_stats_counts(spark):
     assert stats["python_stages"] == 0
 
 
-def test_registry_wide_no_cartesian_no_row_python(spark):
+def test_registry_wide_no_cartesian_no_row_python(batch_query_plans):
     """Every batch registry query's finalized plan is free of the two
     hard anti-patterns, and unpartitioned windows appear only in the
     documented bounded-frame queries (offsets/rank frames whose input
     is key-space- or metadata-bounded, never row-count-bounded) — the
     PLANS.md audit as a standing CI gate instead of a per-round
     artifact."""
-    import __spark_entry__ as entrymod
-
     # global windows over BOUNDED frames, documented per operator:
     # two-phase rank offsets (4^bits keys / rank buckets), compaction
     # bucket offsets (file metadata), top-spender rank (post-aggregate)
@@ -178,10 +176,8 @@ def test_registry_wide_no_cartesian_no_row_python(spark):
         # pair frame (<= ~3.3M rows at the 7-year TPC-H span)
     }
     bad = {}
-    for name, fn in entrymod.queries().items():
-        if name.startswith("streaming_"):
-            continue  # streaming plans run inside the harness
-        df = fn(spark, SF_SMALL)
+    # streaming plans run inside the harness: not in batch_query_plans
+    for name, df in batch_query_plans.items():
         rules = _rules(lint_plan(df))
         rules.discard("unpushed_filter")  # advisory, not a hard gate
         if name in GLOBAL_WINDOW_OK:

@@ -271,7 +271,7 @@ _PY_MARKERS = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
                "FlatMapCoGroupsInPandas", "FlatMapGroupsInPandas")
 
 
-def test_no_cartesian_product_in_any_batch_query(spark):
+def test_no_cartesian_product_in_any_batch_query(batch_query_plans):
     """Registry-wide anti-pattern audit over every batch query's executed
     plan: (a) no CartesianProduct anywhere — the one join strategy that
     is categorically wrong at scale (broadcast nested-loop against a
@@ -282,13 +282,10 @@ def test_no_cartesian_product_in_any_batch_query(spark):
     iterative kmeans are excluded: building them executes the pipeline,
     and their batch result frames carry no plan of interest.
     """
-    import __spark_entry__ as entrymod
-
     cartesian, pythonic = [], set()
-    for name, fn in entrymod.queries().items():
-        if name.startswith("streaming_") or name == "kmeans_embeddings":
+    for name, df in batch_query_plans.items():
+        if name == "kmeans_embeddings":
             continue
-        df = fn(spark, SF_SMALL)
         plan = df._jdf.queryExecution().executedPlan().toString()
         if "CartesianProduct" in plan:
             cartesian.append(name)

@@ -175,12 +175,13 @@ def test_pair_front_end_memo_reuses_frames_for_same_input(spark):
         ["doc_id", "text"],
     )
     caching.release()
-    g1, s1, st1 = _pair_front_end(docs, 3)
-    g2, s2, st2 = _pair_front_end(docs, 3)
-    assert g1 is g2 and s1 is s2 and st1 == st2 == (2, 3)
+    f1 = _pair_front_end(docs, 3)
+    f2 = _pair_front_end(docs, 3)
+    assert f1.groups is f2.groups and f1.sh is f2.sh
+    assert f1.stats == f2.stats == (2, 3)
     # a different n releases and rebuilds (single-slot bound)
-    g3, _s3, _ = _pair_front_end(docs, 2)
-    assert g3 is not g1
+    f3 = _pair_front_end(docs, 2)
+    assert f3.groups is not f1.groups
     caching.release()
 
 
@@ -192,7 +193,7 @@ def test_release_unmemoized_keeps_memo_frames(spark):
         [(1, "a b c"), (2, "a b c")], ["doc_id", "text"]
     )
     caching.release()
-    groups, sh, _ = _pair_front_end(docs, 3)
+    groups = _pair_front_end(docs, 3).groups
     tracked = caching.track(
         docs.select("doc_id").persist(), "some_operator"
     )
