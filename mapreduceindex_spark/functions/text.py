@@ -56,6 +56,14 @@ def words(text: Column | str) -> Column:
     )
 
 
+def has_words(text: Column) -> Column:
+    """Whether ``words(text)`` is non-empty, decided without tokenizing:
+    a token normalizes to a word iff it holds an ASCII letter (the
+    complement of ``NON_ALPHA_RE``), and every letter sits in some
+    token, so one regex find answers it."""
+    return text.rlike("[a-zA-Z]")
+
+
 def token_rows(documents, text_col: str = "text", id_col: str = "doc_id", *extra_cols: str):
     """One row per raw whitespace token: (doc_id, extra..., tok, word).
 

@@ -861,8 +861,8 @@ def curation_funnel(
 
     Pure composition of already-oracle-verified operators
     (``dedup.exact_dedup``, ``dedup.canonical_docs``,
-    ``text_analysis.quality_score``); the funnel adds only three
-    single-row aggregates joined by broadcast, so its cost IS the
+    ``text_analysis.quality_score``); the funnel adds only one
+    single-row aggregate over the canonical set, so its cost IS the
     near-dup pipeline's cost and its 100 TB story is theirs
     (banded candidates, never all-pairs). The quality gate compares
     the 4-dp-exact score, so the count is engine-deterministic.
@@ -873,18 +873,10 @@ def curation_funnel(
     )
 
     # the family's memoized front end (see dedup._pair_front_end): its
-    # clone-collapse frame IS exact dedup — one cached aggregate gives
-    # both the raw count (Σ|members|) and the distinct-content count,
-    # so the funnel never re-scans the corpus for the first two gates
-    groups = _pair_front_end(documents, n).groups
-    raw = groups.agg(
-        F.coalesce(F.sum(F.size("members")), F.lit(0))
-        .cast("long")
-        .alias("n_raw")
-    )
-    ex = groups.agg(
-        F.count(F.lit(1)).cast("long").alias("n_exact_unique")
-    )
+    # clone census IS exact dedup — (distinct contents, documents),
+    # already collected — so the funnel never re-scans the corpus for
+    # the first two gates
+    n_exact_unique, n_raw = _pair_front_end(documents, n).stats
     canon = canonical_docs(documents, n=n, threshold=threshold).agg(
         F.count(F.lit(1)).cast("long").alias("n_canonical"),
         F.sum(
@@ -893,8 +885,11 @@ def curation_funnel(
         .cast("long")
         .alias("n_quality_pass"),
     )
-    return raw.join(F.broadcast(ex)).join(F.broadcast(canon)).select(
-        "n_raw", "n_exact_unique", "n_canonical", "n_quality_pass"
+    return canon.select(
+        F.lit(n_raw).cast("long").alias("n_raw"),
+        F.lit(n_exact_unique).cast("long").alias("n_exact_unique"),
+        "n_canonical",
+        "n_quality_pass",
     )
 
 

@@ -25,14 +25,16 @@ The deterministic md5-based hash (``stable_hash64``) is used instead of
 DuckDB oracle recomputes it bit-for-bit); swap in ``F.xxhash64`` for
 cheaper hashing when cross-engine auditability is not required.
 
-**Laziness caveat**: the adaptive operators here are NOT fully lazy —
-``ngram_jaccard_pairs`` (Σ df² tier probe) and ``near_dup_clusters``
-(clone-group census) run small bounded Spark jobs at *call* time to
-pick an execution tier, so building the DataFrame already costs a few
-scans; those probes collect scalars (counts). ``resolve_components``
-is the exception that collects data: it reads at most
-``driver_max_edges + 1`` edges, and the edge list itself decides the
-tier (and, when it fits, is the driver tier's input).
+**Laziness caveat**: the near-dup family is NOT fully lazy. Its
+memoized front end (``_pair_front_end``) collects one clone census
+(distinct contents, documents) per input, and the exact Jaccard core
+collects one Σ df² probe per (input, df cap) to pick its tier, so the
+first call on a corpus already costs a few scans; both probes collect
+scalars and are memoized beside the front end. ``resolve_components``
+(the tail of ``near_dup_clusters``) is the exception that collects
+data: it reads at most ``driver_max_edges + 1`` edges, and the edge
+list itself decides the tier (and, when it fits, is the driver tier's
+input).
 """
 
 from __future__ import annotations
@@ -45,6 +47,7 @@ from pyspark.storagelevel import StorageLevel
 
 from mapreduceindex_spark.functions import caching
 from mapreduceindex_spark.functions.text import (
+    has_words,
     shingles,  # noqa: F401 — array form kept as the reference semantics
     stable_hash64,
     words,
@@ -224,21 +227,93 @@ def ngram_jaccard_pairs(
         front, threshold, max_shingle_df, direct_join_max_df2,
         track_key="ngram_jaccard_pairs",
     )
-    return _clone_collapsed_pairs(documents, front, core, threshold)
+    return _clone_collapsed_pairs(front, core, threshold)
 
 
 def _md5_clone_groups(documents: DataFrame) -> DataFrame:
     """One row per DISTINCT text content: md5 key, ``rep`` = the
     canonical (min) doc_id, ``members`` = every doc_id carrying that
-    content — the clone-collapse frame `_clone_collapsed_pairs` and its
-    composing callers share. Unpersisted: the caller owns caching."""
+    content, and ``shingled`` = whether the content has ≥ 1 normalized
+    word — the clone-collapse frame `_clone_collapsed_pairs` and its
+    composing callers share. Unpersisted: the caller owns caching.
+
+    ``shingled`` is the "has ≥ 1 shingle" test (the short-doc rule
+    emits the all-words shingle, so ≥ 1 word ⟺ ≥ 1 shingle): zero-word
+    contents never pair in the brute-force join, so clone expansion and
+    star edges must skip them. Clones share their text, so any member
+    answers for the group, and the partial aggregate evaluates the test
+    before the exchange — as ``has_words``' regex find, since it runs
+    on every document (tokenizing each one measured 1.0–1.8 s more per
+    build on a 10×-clone sf0.1 corpus at 4 vCPU, the find ~0.05 s)."""
     return (
-        documents.select("doc_id", F.md5("text").alias("_h"))
+        documents.select(
+            "doc_id",
+            F.md5("text").alias("_h"),
+            has_words(F.col("text")).alias("_w"),
+        )
         .groupBy("_h")
         .agg(
             F.min("doc_id").alias("rep"),
             F.collect_set("doc_id").alias("members"),
+            F.max("_w").alias("shingled"),
         )
+    )
+
+
+def _doc_rep_map(front: _FrontEnd) -> DataFrame:
+    """The slim (doc_id → rep) map of the front end's clone groups:
+    clones carry their rep's shingle set, signature and band keys, so
+    per-document lookups route through it to rep-level frames."""
+    return front.groups.select(
+        F.explode("members").alias("doc_id"), F.col("rep")
+    )
+
+
+def _band_keys(num_hashes: int, bands: int) -> list:
+    """The MinHash-LSH band keys over signature columns ``mh_i``: band
+    ``bi`` of ``bands`` is md5(bi ∥ its ``num_hashes // bands`` row
+    values). The one definition of the bucket format — the batch core,
+    ``incremental_dedup``, ``lsh_band_sweep`` and the streaming
+    detector all bucket by these keys."""
+    rows = num_hashes // bands
+    return [
+        F.md5(
+            F.concat_ws(
+                "_",
+                F.lit(bi),
+                *[
+                    F.col(f"mh_{bi * rows + r}").cast("string")
+                    for r in range(rows)
+                ],
+            )
+        )
+        for bi in range(bands)
+    ]
+
+
+def _verified_pairs(
+    cand: DataFrame, sets: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact-Jaccard verification of candidate pairs: ``cand`` carries
+    ``(doc_a, doc_b)``, ``sets`` one ``(doc_id, hs)`` shingle-hash set
+    per document; output ``(doc_a, doc_b, jaccard)`` with jaccard =
+    round(|∩| / (|A| + |B| − |∩|), 6) ≥ ``threshold``."""
+    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("ha"))
+    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hb"))
+    inter = F.size(F.array_intersect("ha", "hb"))
+    return (
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.round(
+                inter.cast("double")
+                / (F.size("ha") + F.size("hb") - inter),
+                6,
+            ).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -255,7 +330,8 @@ _FRONT_PRESSURE: dict[str, int] = caching.scalar_memo({})
 
 class _FrontEnd(NamedTuple):
     """The pair family's memoized front end (see :func:`_pair_front_end`):
-    the clone-collapse ``groups``, the rep-level shingle frame ``sh``,
+    the clone-collapse ``groups`` (``rep``, ``members``, ``shingled``),
+    the rep-level shingle frame ``sh``,
     its shingle-df frame ``sdf``, the clone census ``stats`` =
     (n_groups, n_docs) and the memo ``fingerprint`` that keys the
     family's driver-side scalars and signature memo."""
@@ -272,7 +348,9 @@ def _pair_front_end(documents: DataFrame, n: int = 3) -> _FrontEnd:
     the pair cores (:func:`_jaccard_rep_pairs`,
     :func:`_minhash_lsh_rep_pairs`) and of the clone expansion
     (:func:`_clone_collapsed_pairs`). ``groups`` is the md5
-    clone-collapse frame (:func:`_md5_clone_groups`), ``sh`` the
+    clone-collapse frame (:func:`_md5_clone_groups`: ``rep``,
+    ``members`` and the ``shingled`` word test, so no caller re-reads
+    the documents to ask which contents can pair), ``sh`` the
     hashed-shingle frame over one REPRESENTATIVE per distinct content
     and ``sdf`` its per-shingle df.
 
@@ -337,7 +415,6 @@ def _pair_front_end(documents: DataFrame, n: int = 3) -> _FrontEnd:
 
 
 def _clone_collapsed_pairs(
-    documents: DataFrame,
     front: _FrontEnd,
     core: DataFrame,
     threshold: float,
@@ -345,38 +422,24 @@ def _clone_collapsed_pairs(
     """Exact-dup pre-collapse shared by the pairwise similarity operators.
 
     ``core`` is a pair core's ``(doc_a, doc_b, jaccard)`` frame over the
-    front end's representatives (one per distinct content of
-    ``documents``); byte-identical groups re-expand as jaccard-1.0 intra
-    pairs and fan out over cross-group pairs. Output is identical to
-    running the core on the full corpus for any core whose verdict
-    depends only on the shingle set: clone members carry identical sets,
-    hence identical jaccard, signatures, and LSH bands (so for the banded
-    core, a member pairs iff its rep pairs). On a duplicate-free corpus
-    (by the front end's clone census) the expansion is the identity and
-    ``core`` is returned as is, ordered.
+    front end's representatives (one per distinct content); byte-
+    identical groups re-expand as jaccard-1.0 intra pairs and fan out
+    over cross-group pairs. Output is identical to running the core on
+    the full corpus for any core whose verdict depends only on the
+    shingle set: clone members carry identical sets, hence identical
+    jaccard, signatures, and LSH bands (so for the banded core, a member
+    pairs iff its rep pairs). Intra pairs come only from ``shingled``
+    groups: zero-word contents have no shingles, so the brute-force join
+    emits no pairs for them. On a duplicate-free corpus (by the front
+    end's clone census) the expansion is the identity and ``core`` is
+    returned as is, ordered.
     """
     n_groups, n_docs = front.stats
     if n_groups == n_docs:
         return core.orderBy("doc_a", "doc_b")
     groups = front.groups
-    rep_docs = documents.join(
-        groups.select(F.col("rep").alias("doc_id")), "doc_id", "left_semi"
-    )
-    # shingle-bearing reps only: zero-word docs have no shingles, so the
-    # brute-force join emits no pairs for them — intra expansion must not.
-    # "has ≥1 shingle" ⟺ "has ≥1 normalized word" (the short-doc rule
-    # emits the all-words shingle), so test words directly: linear scan,
-    # no shingle window/shuffle re-run (a distinct over the prebuilt
-    # shingle frame was measured SLOWER — it shuffles shingle-count
-    # rows to answer a doc-count question).
-    shingled = rep_docs.filter(F.size(words(F.col("text"))) > 0).select(
-        "doc_id"
-    )
-    g = groups.join(
-        shingled.withColumnRenamed("doc_id", "rep"), "rep", "left_semi"
-    )
     intra = (
-        g.filter(F.size("members") > 1)
+        groups.filter(F.col("shingled") & (F.size("members") > 1))
         .select(F.explode("members").alias("doc_a"), "members")
         .select("doc_a", F.explode("members").alias("doc_b"))
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -561,23 +624,10 @@ def _jaccard_rep_pairs(
         .filter(ubound >= alpha)
         .select("doc_a", "doc_b")
     )
-    shsets = ranked.groupBy("doc_id").agg(F.collect_set("sh").alias("hs"))
-    sa = shsets.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("ha"))
-    sb = shsets.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hb"))
-    inter = F.size(F.array_intersect("ha", "hb"))
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                inter.cast("double")
-                / (F.size("ha") + F.size("hb") - inter),
-                6,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    return _verified_pairs(
+        cand,
+        ranked.groupBy("doc_id").agg(F.collect_set("sh").alias("hs")),
+        threshold,
     )
 
 
@@ -656,7 +706,7 @@ def minhash_lsh_pairs(
     """
     front = _pair_front_end(documents, n)
     core = _minhash_lsh_rep_pairs(front, num_hashes, bands, threshold)
-    return _clone_collapsed_pairs(documents, front, core, threshold)
+    return _clone_collapsed_pairs(front, core, threshold)
 
 
 def _minhash_lsh_rep_pairs(
@@ -670,27 +720,10 @@ def _minhash_lsh_rep_pairs(
     The memoized shingle frame ``sh`` feeds both the signatures (the
     memoized :func:`_front_signatures`) and the verification sets; the
     core persists nothing of its own."""
-    rows_per_band = num_hashes // bands
     sig = _front_signatures(front, num_hashes)
-    band_cols = [
-        F.md5(
-            F.concat_ws(
-                "_",
-                F.lit(bi),
-                *[
-                    F.col(f"mh_{bi * rows_per_band + r}").cast("string")
-                    for r in range(rows_per_band)
-                ],
-            )
-        ).alias(f"band_{bi}")
-        for bi in range(bands)
-    ]
-    banded = sig.select("doc_id", *band_cols)
-    stacked = banded.select(
+    stacked = sig.select(
         "doc_id",
-        F.explode(
-            F.array(*[F.col(f"band_{bi}") for bi in range(bands)])
-        ).alias("bucket"),
+        F.explode(F.array(*_band_keys(num_hashes, bands))).alias("bucket"),
     )
     cand = (
         stacked.alias("x")
@@ -701,23 +734,10 @@ def _minhash_lsh_rep_pairs(
         )
         .distinct()
     )
-    shsets = front.sh.groupBy("doc_id").agg(F.collect_set("sh").alias("hs"))
-    sa = shsets.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("ha"))
-    sb = shsets.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hb"))
-    inter = F.size(F.array_intersect("ha", "hb"))
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                inter.cast("double")
-                / (F.size("ha") + F.size("hb") - inter),
-                6,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    return _verified_pairs(
+        cand,
+        front.sh.groupBy("doc_id").agg(F.collect_set("sh").alias("hs")),
+        threshold,
     )
 
 
@@ -780,21 +800,10 @@ def near_dup_clusters(
     if n_groups == n_docs or threshold > 1.0:
         star = None
     else:
-        groups = front.groups
-        rep_docs = documents.join(
-            groups.select(F.col("rep").alias("doc_id")), "doc_id", "left_semi"
-        )
-        # zero-shingle groups (e.g. byte-identical empty docs) never pair
+        # zero-word groups (e.g. byte-identical empty docs) never pair
         # in the brute-force join, so they must not star-connect either
-        # (≥1 shingle ⟺ ≥1 normalized word — linear test, no shingle pass)
-        shingled = rep_docs.filter(F.size(words(F.col("text"))) > 0).select(
-            "doc_id"
-        )
         star = (
-            groups.join(
-                shingled.withColumnRenamed("doc_id", "rep"), "rep", "left_semi"
-            )
-            .filter(F.size("members") > 1)
+            front.groups.filter(F.col("shingled") & (F.size("members") > 1))
             .select("rep", F.explode("members").alias("doc_a"))
             .filter(F.col("doc_a") != F.col("rep"))
             .select("doc_a", F.col("rep").alias("doc_b"))
@@ -880,42 +889,39 @@ def resolve_components(
         return documents.select(
             "doc_id", F.col("doc_id").alias("cluster_rep")
         ).orderBy("doc_id")
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
     # Iterate only over the connected subgraph: docs appearing in ≥1 pair.
     # Even at 100 TB the duplicate-pair graph is a small fraction of the
     # corpus, so every propagation round touches |pairs|-scale data, never
     # corpus-scale; singletons join back once at the end as their own rep.
-    labels = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .select("doc_id", F.col("doc_id").alias("label"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    both_ways = pairs.union(
+        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
+    )
+    nodes = both_ways.select(F.col("doc_a").alias("doc_id")).distinct()
+    # one self-loop per node: the round's single aggregate then sees the
+    # node's own label next to its neighbours' (min over both is the new
+    # label, the self-loop row alone is the old one), so each round
+    # reads the previous labels exactly once — every reference nests the
+    # previous round's whole cached plan, so a second one would multiply
+    # the plan text every round
+    edges = both_ways.union(
+        nodes.select(F.col("doc_id").alias("doc_a"), F.col("doc_id").alias("doc_b"))
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    labels = nodes.select("doc_id", F.col("doc_id").alias("label")).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.doc_a == labels.doc_id)
-            .select(F.col("doc_b").alias("doc_id"), "label")
-            .groupBy("doc_id")
-            .agg(F.min("label").alias("nlabel"))
-        )
         new_labels = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    "label", F.coalesce("nlabel", F.col("label"))
-                ).alias("label"),
+            edges.join(labels, edges.doc_a == labels.doc_id)
+            .groupBy(F.col("doc_b").alias("doc_id"))
+            .agg(
+                F.min("label").alias("label"),
+                F.min(
+                    F.when(F.col("doc_a") == F.col("doc_b"), F.col("label"))
+                ).alias("_old"),
             )
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
+        changed = new_labels.filter(F.col("label") < F.col("_old")).count()
         labels.unpersist()
         labels = new_labels
         if changed == 0:
@@ -1369,10 +1375,7 @@ def minhash_accuracy(
     pairs = minhash_lsh_pairs(documents, n, num_hashes, bands, threshold)
     front = _pair_front_end(documents, n)
     rep_sigs = _front_signatures(front, num_hashes)
-    docmap = front.groups.select(
-        F.explode("members").alias("doc_id"), F.col("rep")
-    )
-    sigs = docmap.join(
+    sigs = _doc_rep_map(front).join(
         rep_sigs.withColumnRenamed("doc_id", "rep"), "rep"
     ).drop("rep")
     matches = sum(
@@ -1503,23 +1506,9 @@ def incremental_dedup(
         F.col("rep").alias("doc_id"), F.col("_bmin").alias("_b")
     )
 
-    sig = _front_signatures(front, num_hashes)
-    rows_per_band = num_hashes // bands
-    band_cols = [
-        F.md5(
-            F.concat_ws(
-                "_",
-                F.lit(bi),
-                *[
-                    F.col(f"mh_{bi * rows_per_band + r}").cast("string")
-                    for r in range(rows_per_band)
-                ],
-            )
-        )
-        for bi in range(bands)
-    ]
-    stacked = sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bucket")
+    stacked = _front_signatures(front, num_hashes).select(
+        "doc_id",
+        F.explode(F.array(*_band_keys(num_hashes, bands))).alias("bucket"),
     )
     d_stack = live.select(F.col("rep").alias("doc_id")).join(
         stacked, "doc_id"
@@ -1601,115 +1590,70 @@ def containment_pairs(
     ``ngram_jaccard_pairs``.
 
     Same scale discipline as the Jaccard family, including its
-    **exact-dup pre-collapse**: byte-identical documents collapse to
-    one representative before any shingling (a clone-heavy corpus
-    otherwise inflates every shingle df by the clone factor and the
-    self-join quadratically), then intra-group ordered pairs re-expand
-    from the representative's CAPPED live-shingle count and cross-group
-    pairs fan out over members — clone members carry identical shingle
-    sets, so the expansion equals the brute-force all-docs join. Both
-    tiers share ONE df/cap basis: shingle df counts **unique contents**
-    (one vote per clone group — the collapsed tier's input is already
-    one-per-content so its plain per-shingle count is that basis; the
-    direct tier subtracts each multi-member group's m−1 over-count
-    from the plain df, a duplicate-mass-sized correction join that the
-    identical-shingle-set invariant makes exact), so a shingle's
+    **exact-dup pre-collapse**: the pair search runs on the family front
+    end's representatives (one per distinct content — a clone-heavy
+    corpus otherwise inflates every shingle df by the clone factor and
+    the self-join quadratically), then intra-group ordered pairs
+    re-expand from the representative's CAPPED live-shingle count and
+    cross-group pairs fan out over members — clone members carry
+    identical shingle sets, so the expansion equals the brute-force
+    all-docs join. Shingle df counts **unique contents** (the front
+    end's ``sdf``: one vote per clone group), so a shingle's
     live/capped status — and therefore every pair's ``n_common`` and
-    ppm — is identical whichever tier the adaptive probe picks. The
-    core is the Jaccard direct tier's shape: the shared
-    ``_shingle_hashes`` 16-byte front end, the ``max_shingle_df``
+    ppm — does not depend on how often a content is cloned. On a
+    duplicate-free corpus (by the front end's clone census) the
+    expansion is the identity and the rep-level pairs are returned as
+    is, ordered. The core is the Jaccard direct tier's shape: the
+    shared 16-byte shingle-hash front end, the ``max_shingle_df``
     hot-shingle cap (the oracle brute-forces uncapped — identical under
     fixture dfs, the family's documented relationship), one hash-join
     for intersections, one doc-keyed sizes join.
     """
-    from mapreduceindex_spark.functions import caching
-
     caching.release("containment_pairs")
-
-    # Family-shared memoized front end (the lsh_recall discipline):
-    # groups, the rep-level shingle frame, and the shingle-df frame are
-    # reused instead of re-scanning md5 groups + re-shingling per call.
-    # The df basis is front.sdf VERBATIM for both tiers: the former
-    # direct-tier anti-join (drop non-representative clone members,
-    # then count) left exactly one vote per content — which is exactly
-    # what the rep-only shingle frame counts.
     front = _pair_front_end(documents, n)
-    groups, sh_reps = front.groups, front.sh
-    docmap = groups.select(
-        F.explode("members").alias("doc_id"), F.col("rep")
+    groups, sh = front.groups, front.sh
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_n_sh"))
+    # persisted: the pair self-join scans it twice, and with clones
+    # present the intra expansion reads it again through live_sizes
+    live = caching.track(
+        sh.join(
+            front.sdf.filter(F.col("sdf") <= max_shingle_df).select("sh"),
+            "sh",
+            "left_semi",
+        ).persist(StorageLevel.MEMORY_AND_DISK),
+        "containment_pairs",
     )
-    df_votes = front.sdf.withColumnRenamed("sdf", "_df")
-
-    def _core(sh):
-        # ``sh``: the tier's (doc_id, sh) frame — rep-only (collapsed
-        # tier) or expanded to every member through the (doc → rep) map
-        # (direct tier; clone members carry identical shingle sets, so
-        # the expansion equals re-shingling the full corpus).
-        sizes = sh.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("_n_sh")
+    a = live.select(F.col("doc_id").alias("doc_a"), "sh")
+    b = live.select(F.col("doc_id").alias("doc_b"), "sh")
+    inter = (
+        a.join(b, "sh")
+        .filter(F.col("doc_a") != F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("_common"))
+    )
+    pairs = (
+        inter.join(
+            sizes.select(F.col("doc_id").alias("doc_a"), "_n_sh"), "doc_a"
         )
-        # persisted: the collapsed tier consumes this frame through BOTH
-        # union branches (cross via the pair join, intra via live_sizes)
-        # and union branches re-execute unpersisted shared subtrees
-        live = caching.track(
-            sh.join(
-                df_votes.filter(F.col("_df") <= max_shingle_df)
-                .select("sh"),
-                "sh",
-                "left_semi",
-            ).persist(StorageLevel.MEMORY_AND_DISK),
-            "containment_pairs",
+        .select(
+            "doc_a",
+            "doc_b",
+            F.col("_common").cast("long").alias("n_common"),
+            F.expr("(_common * 1000000) DIV _n_sh")
+            .cast("long")
+            .alias("containment_ppm"),
         )
-        a = live.select(F.col("doc_id").alias("doc_a"), "sh")
-        b = live.select(F.col("doc_id").alias("doc_b"), "sh")
-        inter = (
-            a.join(b, "sh")
-            .filter(F.col("doc_a") != F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("_common"))
-        )
-        pairs = (
-            inter.join(
-                sizes.select(F.col("doc_id").alias("doc_a"), "_n_sh"),
-                "doc_a",
-            )
-            .select(
-                "doc_a",
-                "doc_b",
-                F.col("_common").cast("long").alias("n_common"),
-                F.expr("(_common * 1000000) DIV _n_sh")
-                .cast("long")
-                .alias("containment_ppm"),
-            )
-            .filter(F.col("containment_ppm") >= threshold_ppm)
-        )
-        live_sizes = live.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("_n_live")
-        )
-        return pairs, sizes, live_sizes
-
-    # adaptive tier (same probe the Jaccard family pays, now off the
-    # memoized clone census): the direct core is exact WITH dupes
-    # present — clones share every shingle and pair from their shared
-    # live set naturally — so collapse+expand machinery (an extra
-    # aggregate, two explodes, a union) only pays once duplicate mass
-    # is material; measured at sf0.1 (8 dupes/5000): direct 2.4 s vs
-    # collapsed 4.9 s, while at 10x clones the collapse is the
-    # difference between Σdf²·100 and output-proportional (4.6 s).
+        .filter(F.col("containment_ppm") >= threshold_ppm)
+    )
     n_groups, n_docs = front.stats
-    if n_docs - n_groups <= n_groups // 20:
-        sh_all = docmap.join(
-            sh_reps.withColumnRenamed("doc_id", "rep"), "rep"
-        ).select("doc_id", "sh")
-        pairs, _, _ = _core(sh_all)
+    if n_groups == n_docs:
         return pairs.orderBy("doc_a", "doc_b")
-    pairs, sizes, live_sizes = _core(sh_reps)
+    live_sizes = live.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_n_live"))
     # intra-group: every ordered member pair shares the identical set —
     # n_common is the rep's LIVE (cap-surviving) shingle count and ppm
-    # is live/total, exactly what the direct tier's hash-join would
+    # is live/total, exactly what a hash-join over all documents would
     # produce for the clone pair; groups whose rep has no live shingles
-    # join out (zero-word or fully-capped docs pair with nothing,
-    # matching the direct tier)
+    # join out (zero-word or fully-capped docs pair with nothing)
     intra = (
         groups.filter(F.size("members") > 1)
         .join(sizes.withColumnRenamed("doc_id", "rep"), "rep")
@@ -1777,25 +1721,14 @@ def lsh_recall(
     them on the (doc_a, doc_b) key — one left-semi mark join + one
     single-row fold.
 
-    Shared front end (the ``containment_pairs`` discipline, plus
-    deliberate cross-call reuse): the md5 clone-collapse groups AND the
-    ``_shingle_hashes`` frame are built ONCE and threaded through both
-    legs explicitly. Measured finding (r09): within one call this is
-    wall-clock NEUTRAL vs composing the two public operators — their
-    per-leg persists carry CANONICALLY IDENTICAL plans, so Spark's
-    CacheManager was already collapsing the "double" front end into one
-    computation + cache hits; the explicit frame removes that hidden
-    load-bearing dependence on plan canonicalization (a refactor that
-    de-canonicalized one leg would have silently doubled the work) but
-    cannot remove work that was never done twice. The real reuse win is
-    CROSS-call: the pair is held through ``caching.memo`` keyed on the
-    input plan's semantic hash + n, so re-running the calibration
-    against an unchanged corpus pays only the pair legs (measured at
-    sf0.1: 22 s cold → 6.4 s memo-warm; the bench harness clears all
-    caches between runs by design — ``memo`` detects the externally
-    cleared frames via their storage level and rebuilds cleanly).
-    Still exactly one cache set for this operator; a changed input
-    releases and rebuilds.
+    Shared front end: both legs read the family's memoized front end
+    (:func:`_pair_front_end` — md5 clone groups, rep-level shingle
+    frame), held through ``caching.memo`` keyed on the input plan's
+    semantic hash + n, so re-running the calibration against an
+    unchanged corpus pays only the pair legs (measured at sf0.1: 22 s
+    cold → 6.4 s memo-warm; ``memo`` detects externally cleared frames
+    via their storage level and rebuilds cleanly). Still exactly one
+    cache set for the front end; a changed input releases and rebuilds.
     """
     # two caching keys: "dedup_front" holds the FAMILY-shared memoized
     # front end (released only on an input-fingerprint change — NEVER
@@ -1805,7 +1738,6 @@ def lsh_recall(
     caching.release("lsh_recall_pairs")
     front = _pair_front_end(documents, n)
     truth = _clone_collapsed_pairs(
-        documents,
         front,
         _jaccard_rep_pairs(
             front, threshold, MAX_SHINGLE_DF, DIRECT_JOIN_MAX_DF2,
@@ -1814,7 +1746,6 @@ def lsh_recall(
         threshold,
     ).select("doc_a", "doc_b")
     found = _clone_collapsed_pairs(
-        documents,
         front,
         _minhash_lsh_rep_pairs(front, num_hashes, bands, threshold),
         threshold,
@@ -2103,9 +2034,9 @@ def lsh_band_sweep(
     quadratic-risk config) is one hash aggregate. Recall is decided
     directly on the truth pairs: join each truth pair to its two
     signatures and test band equality — never through a candidate
-    join. Band keys are byte-identical to ``minhash_lsh_pairs``'s
-    (md5(band_index ∥ row values)), so the sweep prices the production
-    join, not an approximation of it.
+    join. Band keys come from the same :func:`_band_keys` as
+    ``minhash_lsh_pairs``'s (md5(band_index ∥ row values)), so the sweep
+    prices the production join, not an approximation of it.
 
     Shared front end (the ``lsh_recall`` discipline): ONE clone-group
     scan and ONE rep-level shingle frame feed the truth leg AND the
@@ -2132,7 +2063,6 @@ def lsh_band_sweep(
     groups = front.groups
     sig_reps = _front_signatures(front, num_hashes)
     truth = _clone_collapsed_pairs(
-        documents,
         front,
         _jaccard_rep_pairs(
             front, threshold, MAX_SHINGLE_DF, DIRECT_JOIN_MAX_DF2,
@@ -2143,9 +2073,7 @@ def lsh_band_sweep(
     # slim (doc → rep) map instead of a per-doc 17-column signature
     # expansion: clones carry their rep's signature by the collapse
     # invariant, so the truth join routes through the map
-    docmap = groups.select(
-        F.explode("members").alias("doc_id"), F.col("rep")
-    )
+    docmap = _doc_rep_map(front)
     sa = docmap.withColumnRenamed("doc_id", "doc_a").join(
         sig_reps.select(
             F.col("doc_id").alias("rep"),
@@ -2198,25 +2126,11 @@ def lsh_band_sweep(
         ),
         "n_truth",
     )
-    tagged = []
-    for b in bands_list:
-        rows = num_hashes // b
-        for bi in range(b):
-            tagged.append(
-                F.struct(
-                    F.lit(b).cast("long").alias("bands"),
-                    F.md5(
-                        F.concat_ws(
-                            "_",
-                            F.lit(bi),
-                            *[
-                                F.col(f"mh_{bi * rows + r}").cast("string")
-                                for r in range(rows)
-                            ],
-                        )
-                    ).alias("bucket"),
-                )
-            )
+    tagged = [
+        F.struct(F.lit(b).cast("long").alias("bands"), key.alias("bucket"))
+        for b in bands_list
+        for key in _band_keys(num_hashes, b)
+    ]
     # raw-corpus bucket sizes WITHOUT expanding clones: a clone group of
     # size g contributes g copies of its rep's band keys, so bucket size
     # = Σ group sizes — one weighted aggregate over the rep signatures

@@ -899,6 +899,10 @@ def streaming_lsh_dedup_pairs(
     from mapreduceindex_spark.operators.dedup import (
         MINHASH_PRIME,
         _affine_coeffs,
+        _band_keys,
+        _doc_rep_map,
+        _pair_front_end,
+        _verified_pairs,
     )
     from mapreduceindex_spark.session import ensure_session_confs, load_table
 
@@ -947,20 +951,6 @@ def streaming_lsh_dedup_pairs(
         sig = sig.withColumn(
             f"mh_{i}", F.array_min(F.transform(F.col("_hs"), _lane(a, b)))
         )
-    rows_per_band = num_hashes // bands
-    band_cols = [
-        F.md5(
-            F.concat_ws(
-                "_",
-                F.lit(bi),
-                *[
-                    F.col(f"mh_{bi * rows_per_band + r}").cast("string")
-                    for r in range(rows_per_band)
-                ],
-            )
-        )
-        for bi in range(bands)
-    ]
     # State stays keyed on the RAW bucket: only buckets with arrivals
     # pay any state I/O in a micro-batch, so per-batch cost tracks
     # BATCH size, not accumulated index size. (A shard-keyed variant —
@@ -970,7 +960,8 @@ def streaming_lsh_dedup_pairs(
     # ENTIRE accumulated index each batch — quadratic total work over a
     # long-running stream. The actual win was the repartition above.)
     stacked = sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bucket")
+        "doc_id",
+        F.explode(F.array(*_band_keys(num_hashes, bands))).alias("bucket"),
     )
 
     cand_stream = stacked.groupBy("bucket").applyInPandasWithState(
@@ -990,44 +981,19 @@ def streaming_lsh_dedup_pairs(
         partitions=max(spark.sparkContext.defaultParallelism, 8),
     ).distinct()
 
-    # batch verification — byte-for-byte the batch verifier's formula.
-    # Shingle sets come from the memoized dedup front end (one rep per
-    # distinct content, cached): clones carry identical shingle sets,
-    # so routing each candidate doc through the (doc → rep) map yields
-    # the same jaccard as re-shingling the whole corpus did — without
-    # paying the full shingle pass per invocation.
-    from mapreduceindex_spark.operators.dedup import _pair_front_end
-
+    # batch verification — the batch verifier itself. Shingle sets come
+    # from the memoized dedup front end (one rep per distinct content,
+    # cached): clones carry identical shingle sets, so routing each
+    # candidate doc through the (doc → rep) map yields the same jaccard
+    # as re-shingling the whole corpus did — without paying the full
+    # shingle pass per invocation.
     docs = load_table(spark, sf_dir, "documents")
     front = _pair_front_end(docs, n)
-    docmap = front.groups.select(
-        F.explode("members").alias("doc_id"), F.col("rep")
-    )
-    shsets = front.sh.groupBy("doc_id").agg(
+    shsets = front.sh.groupBy(F.col("doc_id").alias("rep")).agg(
         F.collect_set("sh").alias("hs")
-    ).withColumnRenamed("doc_id", "rep")
-    sa = docmap.join(shsets, "rep").select(
-        F.col("doc_id").alias("doc_a"), F.col("hs").alias("ha")
     )
-    sb = docmap.join(shsets, "rep").select(
-        F.col("doc_id").alias("doc_b"), F.col("hs").alias("hb")
-    )
-    inter = F.size(F.array_intersect("ha", "hb"))
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                inter.cast("double")
-                / (F.size("ha") + F.size("hb") - inter),
-                6,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .orderBy("doc_a", "doc_b")
-    )
+    sets = _doc_rep_map(front).join(shsets, "rep").select("doc_id", "hs")
+    return _verified_pairs(cand, sets, threshold).orderBy("doc_a", "doc_b")
 
 
 def streaming_semantic_dedup_pairs(

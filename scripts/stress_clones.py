@@ -233,6 +233,25 @@ def main():
     # adaptive pre-collapse must keep the self-join at unique-content
     # level, with the half-million-pair output the honest cost
     timed("containment_pairs_10x", lambda: D.containment_pairs(cloned))
+    # the same pair plan with the family front end already memoized (the
+    # state any earlier near-dup call on the corpus leaves): one untimed
+    # call builds the front end, then the median of 3 times the
+    # collapsed containment plan alone — run at a low clone factor too,
+    # where the duplicate mass is small
+    if only is None or "containment_pairs_warm" in only:
+        D.containment_pairs(cloned).count()
+        secs = []
+        for _ in range(3):
+            t0 = time.time()
+            cnt = D.containment_pairs(cloned).count()
+            secs.append(time.time() - t0)
+        timings["containment_pairs_warm"] = {
+            "sec": round(sorted(secs)[1], 2),
+            "rows": cnt,
+        }
+        spark.catalog.clearCache()
+        cloned.persist().count()
+        spark._jvm.System.gc()
     # round-7 claims under stress:
     # - repetition_profile is per-doc (two doc-keyed folds): 10× docs
     #   must cost ~10× scan, no cross-doc blowup exists to trigger

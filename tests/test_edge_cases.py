@@ -180,6 +180,21 @@ def test_cluster_tiers_agree(spark):
         (1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 5), (7, 7), (8, 7), (9, 9)
     ]
 
+    # A path needs one propagation round per hop (5 here, plus one that
+    # sees no change). Each round must read the previous labels once: a
+    # round that read them twice grew the plan 4× per round (27 MB of
+    # optimized plan text for this path).
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 6)], "doc_a long, doc_b long"
+    )
+    res = D.resolve_components(path, ids, driver_max_edges=0)
+    plan = res._jdf.queryExecution().optimizedPlan().toString()
+    assert len(plan) < 5_000_000, len(plan)
+    assert sorted(tuple(r) for r in res.collect()) == [
+        (i, 1 if i <= 6 else i) for i in range(1, 10)
+    ]
+    caching.release("resolve_components")
+
 
 def test_tf_idf_single_doc_is_zero(spark):
     # idf = ln(1/1) = 0 for every word when the corpus is one doc.
@@ -226,13 +241,27 @@ def test_cluster_star_edges_match_full_expansion(spark):
         spark,
         [(i, dup) for i in range(1, 6)]
         + [(6, dup + " with a small tail"), (7, "nothing in common at all")]
-        + [(8, ""), (9, "")],  # byte-identical empties must NOT cluster
+        + [(8, ""), (9, "")]  # byte-identical empties must NOT cluster
+        # byte-identical, non-empty, but no normalized word: no shingles
+        + [(10, "42 17"), (11, "42 17")],
     )
     got = {
         (r["doc_id"], r["cluster_rep"])
         for r in D.near_dup_clusters(docs, n=3, threshold=0.5).collect()
     }
-    assert got == {(i, 1) for i in range(1, 7)} | {(7, 7), (8, 8), (9, 9)}
+    assert got == {(i, 1) for i in range(1, 7)} | {
+        (i, i) for i in (7, 8, 9, 10, 11)
+    }
+    # the same word test decides the pair operators' clone expansion
+    wordless = {8, 9, 10, 11}
+    for pairs in (
+        D.ngram_jaccard_pairs(docs, n=3, threshold=0.5),
+        D.minhash_lsh_pairs(docs, n=3, threshold=0.5),
+        D.containment_pairs(docs, n=3),
+    ):
+        rows = pairs.collect()
+        assert rows
+        assert not [r for r in rows if {r["doc_a"], r["doc_b"]} & wordless]
 
 
 def test_deterministic_sample_monotone_and_stable(spark):

@@ -16,7 +16,7 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-from mapreduceindex_spark.functions.text import normalize_token, words
+from mapreduceindex_spark.functions.text import has_words, normalize_token, words
 
 #: Printable-ASCII-plus-whitespace text, the reference's input domain.
 TEXTS = st.text(
@@ -53,8 +53,11 @@ def _py_words(text: str) -> list[str]:
 @SETTINGS
 def test_words_matches_python_reference(spark, batch):
     df = spark.createDataFrame([(t,) for t in batch], ["text"])
-    got = [r["w"] for r in df.select(words(F.col("text")).alias("w")).collect()]
-    assert got == [_py_words(t) for t in batch]
+    rows = df.select(
+        words(F.col("text")).alias("w"), has_words(F.col("text")).alias("h")
+    ).collect()
+    assert [r["w"] for r in rows] == [_py_words(t) for t in batch]
+    assert [r["h"] for r in rows] == [bool(_py_words(t)) for t in batch]
 
 
 @given(batch=st.lists(TEXTS, min_size=1, max_size=8))
@@ -86,9 +89,9 @@ def test_inverted_index_df_bounds(spark, batch):
 
 
 # ---------------------------------------------------------------------------
-# round 7: containment_pairs tier-equality property — whichever tier the
-# adaptive probe picks (hypothesis varies clone mass across examples, so
-# both fire), the output must equal the brute-force ordered-pair join
+# round 7: containment_pairs clone-collapse property — at every clone
+# mass hypothesis draws (none included, where the expansion is the
+# identity), the output must equal the brute-force ordered-pair join
 # computed over the SAME unified df basis (df over unique contents,
 # max_shingle_df cap, containment = live-common / total-shingles).
 # ---------------------------------------------------------------------------

@@ -52,7 +52,7 @@ def test_containment_intra_pairs_use_capped_commons(spark):
     """When a clone group's own shingle is capped OUT under the unified
     unique-contents df (df 3 > cap 2), intra-clone pairs must report the
     LIVE common count and live/total ppm — not a hardcoded 1e6 — exactly
-    what the direct tier's hash-join would produce for the pair."""
+    what a hash-join over every document would produce for the pair."""
     from mapreduceindex_spark.operators.dedup import containment_pairs
 
     a = "aa bb cc dd"      # shingles: aa-bb-cc (unique df 3), bb-cc-dd (df 1)
@@ -79,11 +79,10 @@ def test_containment_intra_pairs_use_capped_commons(spark):
 
 
 def test_containment_direct_tier_shares_unique_df_basis(spark):
-    """Dup mass just under the 5% probe keeps the DIRECT tier, where a
-    clone previously triple-counted a shared shingle's df: with A cloned
-    once, the A-B shared shingle has df-over-copies 3 but unique df 2 —
-    under cap 2 it must stay live in the direct tier too, so both tiers
-    agree whichever the probe picks."""
+    """Shingle df counts unique contents, not copies, at low dup mass
+    too (one clone in 23 docs): with A cloned once, the A-B shared
+    shingle has df-over-copies 3 but unique df 2 — under cap 2 it must
+    stay live, for the clone as for its rep."""
     from mapreduceindex_spark.operators.dedup import containment_pairs
 
     filler = [

@@ -1595,6 +1595,7 @@ def test_band_sweep_clone_weighted_probes_match_naive(spark):
         _shingle_hashes,
         _signatures_from_hashes,
         lsh_band_sweep,
+        lsh_recall,
         ngram_jaccard_pairs,
     )
 
@@ -1650,6 +1651,11 @@ def test_band_sweep_clone_weighted_probes_match_naive(spark):
     # recalled at every config — identical signatures share every band
     assert {(1, 2), (1, 3), (2, 3)} <= truth
     assert all(r["n_recalled"] >= 3 for r in got.values())
+    # the sweep's band keys are the pair search's: its bands=4 row
+    # prices exactly the configuration lsh_recall scores
+    (rec,) = lsh_recall(docs).collect()
+    assert got[4]["n_truth"] == rec["n_true"]
+    assert got[4]["n_recalled"] == rec["n_found"]
 
 
 # ---------------------------------------------------------------------------
