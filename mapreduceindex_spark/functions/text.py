@@ -13,6 +13,17 @@ Semantics match the reference mapper bit-for-bit (SURVEY.md §2 O3–O5):
 
 All of these are pure Catalyst expressions (whole-stage-codegen'd,
 JVM-side); no Python executes per row.
+
+Two row-wise front ends turn a documents table into rows, so every
+consumer tokenizes the same way:
+
+- :func:`token_rows` — one row per RAW whitespace token, with its
+  normalized word (possibly empty): the inverted index's map side and
+  the raw-token statistics.
+- :func:`word_rows` — one row per non-empty normalized word, with its
+  position and the doc's word count: the positional consumers (the
+  query front, shingles, n-gram quality and contamination operators).
+  :func:`word_ngrams` builds the strict word n-grams over those rows.
 """
 
 from __future__ import annotations
@@ -67,11 +78,11 @@ def has_words(text: Column) -> Column:
 def token_rows(documents, text_col: str = "text", id_col: str = "doc_id", *extra_cols: str):
     """One row per raw whitespace token: (doc_id, extra..., tok, word).
 
-    THE shared row-wise tokenization front end — the flagship index, text
-    analysis, simhash, and the streaming index all consume this, so the
-    reference semantics (split → normalize) live in exactly one place.
-    ``word`` may be empty (callers filter or count conditionally so
-    raw-token statistics stay available).
+    The raw-token front end — the flagship index, text analysis,
+    simhash, and the streaming index all consume this. ``word`` may be
+    empty (callers filter or count conditionally so raw-token
+    statistics stay available). Consumers that need word POSITIONS use
+    :func:`word_rows` instead, whose positions skip the empty words.
     """
     import pyspark.sql.functions as _F
 
@@ -84,6 +95,46 @@ def token_rows(documents, text_col: str = "text", id_col: str = "doc_id", *extra
         *extra_cols,
         "tok",
         normalize_token("tok").alias("word"),
+    )
+
+
+def word_rows(documents, *extra_cols: str):
+    """One row per non-empty normalized word: (doc_id, extra..., nw, pos, w).
+
+    The word-position front end: ``pos`` is the 0-based index into
+    ``words(text)`` (empty-normalized tokens never get a position, so
+    consecutive positions are adjacent words) and ``nw`` is the doc's
+    word count, ``size(words(text))``. Documents with no words yield no
+    rows. One codegen'd projection + ``posexplode``, no exchange.
+    """
+    return documents.select(
+        "doc_id", *extra_cols, words(F.col("text")).alias("ws")
+    ).select(
+        "doc_id",
+        *extra_cols,
+        F.size("ws").alias("nw"),
+        F.posexplode("ws").alias("pos", "w"),
+    )
+
+
+def word_ngrams(rows, n: int):
+    """Strict word ``n``-grams over :func:`word_rows` rows: every input
+    column plus ``ng``, the space-joined words ``pos … pos+n−1``, for
+    each ``pos <= nw − n`` (docs shorter than ``n`` words give none).
+
+    Built from ``lead()`` neighbors over a per-doc window ordered by
+    ``pos`` — linear and whole-stage codegen'd, one exchange on doc_id;
+    slices of the word array inside ``transform`` measured no faster.
+    ``concat_ws`` skips NULL leads, so a caller that raises ``nw`` to
+    ``n`` for short docs gets their all-words gram at ``pos = 0``
+    (``dedup.doc_shingles``' short-doc rule).
+    """
+    from pyspark.sql.window import Window
+
+    win = Window.partitionBy("doc_id").orderBy("pos")
+    parts = [F.col("w")] + [F.lead("w", j).over(win) for j in range(1, n)]
+    return rows.select("*", F.concat_ws(" ", *parts).alias("ng")).filter(
+        F.col("pos") <= F.col("nw") - n
     )
 
 

@@ -14,7 +14,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from mapreduceindex_spark.functions.text import stable_hash64, words
+from mapreduceindex_spark.functions.text import (
+    stable_hash64,
+    word_ngrams,
+    word_rows,
+    words,
+)
 
 #: Shared (Java regex ∩ RE2) PII patterns — identical text on both engines.
 PII_PATTERNS = (
@@ -74,24 +79,13 @@ def ngram_counts(
 
     Strict n-grams (docs shorter than ``n`` words contribute none), every
     occurrence counted — the vocabulary/statistics pass of a data
-    pipeline. posexplode + lead keeps the whole plan codegen'd (see
-    ``dedup.doc_shingles`` for the measured HOF comparison); one hash
-    aggregate, (count DESC, ngram ASC) tie-break before the limit.
+    pipeline. ``functions.text.word_ngrams`` keeps the whole plan
+    codegen'd; one hash aggregate, (count DESC, ngram ASC) tie-break
+    before the limit.
     """
-    base = documents.select("doc_id", words(F.col("text")).alias("ws"))
-    toks = base.select(
-        "doc_id",
-        F.size("ws").alias("nw"),
-        F.posexplode("ws").alias("pos", "w"),
-    )
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("w")] + [F.lead("w", j).over(win) for j in range(1, n)]
     return (
-        toks.select(
-            "nw", "pos", F.concat_ws(" ", *parts).alias("ngram")
-        )
-        .filter(F.col("pos") <= F.col("nw") - n)
-        .groupBy("ngram")
+        word_ngrams(word_rows(documents), n)
+        .groupBy(F.col("ng").alias("ngram"))
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
         .orderBy(F.col("n_occurrences").desc(), F.col("ngram").asc())
         .limit(top_k)
@@ -162,10 +156,8 @@ def doc_chunks(documents: DataFrame, chunk_size: int = 50) -> DataFrame:
 
     Output: (doc_id, chunk_id, n_tokens, first_word, last_word).
     """
-    base = documents.select("doc_id", words(F.col("text")).alias("ws"))
-    toks = base.select("doc_id", F.posexplode("ws").alias("pos", "w"))
     return (
-        toks.select(
+        word_rows(documents).select(
             "doc_id",
             F.expr(f"pos DIV {chunk_size}").cast("long").alias("chunk_id"),
             "pos",
@@ -286,17 +278,8 @@ def repetition_score(documents: DataFrame, n: int = 2) -> DataFrame:
     the rationale). Plan: one explode→lead pass (codegen'd), one per-doc
     aggregate, one broadcast join-back to restore zero-ngram docs.
     """
-    base = documents.select("doc_id", words(F.col("text")).alias("ws"))
-    toks = base.select(
-        "doc_id",
-        F.size("ws").alias("nw"),
-        F.posexplode("ws").alias("pos", "w"),
-    )
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("w")] + [F.lead("w", j).over(win) for j in range(1, n)]
     per_doc = (
-        toks.select("doc_id", "nw", "pos", F.concat_ws(" ", *parts).alias("ng"))
-        .filter(F.col("pos") <= F.col("nw") - n)
+        word_ngrams(word_rows(documents), n)
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_ngrams"),
@@ -431,19 +414,8 @@ def boilerplate_score(
     from mapreduceindex_spark.functions import caching
 
     caching.release("boilerplate_score")
-    base = documents.select("doc_id", words(F.col("text")).alias("ws"))
-    toks = base.select(
-        "doc_id",
-        F.size("ws").alias("nw"),
-        F.posexplode("ws").alias("pos", "w"),
-    )
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("w")] + [F.lead("w", j).over(win) for j in range(1, n)]
     pos_df = caching.track(
-        toks.select(
-            "doc_id", "nw", "pos", F.concat_ws(" ", *parts).alias("ng")
-        )
-        .filter(F.col("pos") <= F.col("nw") - n)
+        word_ngrams(word_rows(documents), n)
         .select("doc_id", stable_hash64("ng").alias("h"))
         .persist(StorageLevel.MEMORY_AND_DISK),
         "boilerplate_score",
@@ -609,12 +581,7 @@ def bigram_lift(documents: DataFrame, top_k: int = 50) -> DataFrame:
     vocabulary dim is the standard practice). Top-k by (n_ab DESC,
     bigram ASC) before the joins, so only ``top_k`` rows reach them.
     """
-    base = documents.select("doc_id", words(F.col("text")).alias("ws"))
-    toks = base.select(
-        "doc_id",
-        F.size("ws").alias("nw"),
-        F.posexplode("ws").alias("pos", "w"),
-    )
+    toks = word_rows(documents)
     unigrams = toks.groupBy("w").agg(F.count(F.lit(1)).alias("n_uni"))
     total = toks.select(F.count(F.lit(1)).alias("n_total"))
     win = Window.partitionBy("doc_id").orderBy("pos")
@@ -733,25 +700,8 @@ def cross_source_overlap(documents: DataFrame, n: int = 8) -> DataFrame:
     sparse: only genuinely shared passages survive the distinct+join.
     Hashes only in every exchange.
     """
-    base = documents.select(
-        "doc_id", "source", words(F.col("text")).alias("ws")
-    )
-    toks = base.select(
-        "doc_id",
-        "source",
-        F.size("ws").alias("nw"),
-        F.posexplode("ws").alias("pos", "w"),
-    )
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("w")] + [F.lead("w", j).over(win) for j in range(1, n)]
     sh = (
-        toks.select(
-            "source",
-            "nw",
-            "pos",
-            F.concat_ws(" ", *parts).alias("ng"),
-        )
-        .filter(F.col("pos") <= F.col("nw") - n)
+        word_ngrams(word_rows(documents, "source"), n)
         .select("source", stable_hash64("ng").alias("_h"))
         .dropDuplicates(["source", "_h"])
     )
@@ -1623,8 +1573,7 @@ def skipgram_cooccurrence(
 
     Output: (pair, n_ab, n_a, n_b, lift), (n_ab DESC, pair ASC).
     """
-    base = documents.select("doc_id", words(F.col("text")).alias("ws"))
-    toks = base.select("doc_id", F.posexplode("ws").alias("pos", "w"))
+    toks = word_rows(documents)
     unigrams = toks.groupBy("w").agg(F.count(F.lit(1)).alias("n_uni"))
     total = toks.select(F.count(F.lit(1)).alias("n_total"))
     win = Window.partitionBy("doc_id").orderBy("pos")

@@ -48,8 +48,9 @@ from pyspark.storagelevel import StorageLevel
 from mapreduceindex_spark.functions import caching
 from mapreduceindex_spark.functions.text import (
     has_words,
-    shingles,  # noqa: F401 — array form kept as the reference semantics
     stable_hash64,
+    word_ngrams,
+    word_rows,
     words,
 )
 
@@ -108,12 +109,13 @@ def doc_shingles(
     projection — e.g. the hash front end, which dedups 16-byte
     (doc_id, hash) rows instead of shuffling full shingle strings).
 
-    Row-wise formulation: posexplode the word array, then build each
-    shingle from ``lead()`` neighbors over a per-doc window. Matches
-    sliding slices of the word array (``functions.text.shingles``) for
-    every document with ≥ 1 word — including the short-doc case:
-    ``concat_ws`` skips the NULL leads, so a doc with ≤ n words yields
-    the single all-words shingle. Documents with ZERO normalized words
+    Row-wise formulation: the strict n-grams of ``functions.text``'s
+    ``word_rows``/``word_ngrams``, with each doc's word count raised to
+    ``n`` first. Matches sliding slices of the word array
+    (``functions.text.shingles``) for every document with ≥ 1 word —
+    including the short-doc case: ``concat_ws`` skips the NULL leads, so
+    a doc with ≤ n words yields the single all-words shingle at
+    ``pos = 0``. Documents with ZERO normalized words
     yield no shingles (they cannot meaningfully near-dup; byte-identical
     empties are ``exact_dedup``'s job) — the array form would give them
     one empty-string shingle instead. The array form also runs
@@ -122,29 +124,8 @@ def doc_shingles(
     codegen'd, and its one exchange (window by doc_id) replaces
     no-shuffle-but-quadratic-CPU with cheap-shuffle.
     """
-    from pyspark.sql.window import Window
-
-    base = documents.select("doc_id", words(F.col("text")).alias("ws"))
-    toks = base.select(
-        "doc_id",
-        F.size("ws").alias("nw"),
-        F.posexplode("ws").alias("pos", "w"),
-    )
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("w")] + [F.lead("w", j).over(win) for j in range(1, n)]
-    out = (
-        toks.select(
-            "doc_id",
-            "nw",
-            "pos",
-            F.concat_ws(" ", *parts).alias("shingle"),
-        )
-        .filter(
-            (F.col("pos") <= F.col("nw") - n)
-            | ((F.col("pos") == 0) & (F.col("nw") <= n))
-        )
-        .select("doc_id", "shingle")
-    )
+    rows = word_rows(documents).withColumn("nw", F.greatest("nw", F.lit(n)))
+    out = word_ngrams(rows, n).select("doc_id", F.col("ng").alias("shingle"))
     return out.dropDuplicates(["doc_id", "shingle"]) if distinct else out
 
 
@@ -1155,21 +1136,8 @@ def dup_spans(
     from mapreduceindex_spark.functions.spread import spread_rows
 
     caching.release("dup_spans")  # free this operator's previous cache
-    base = spread_rows(documents, "doc_id").select(
-        "doc_id", words(F.col("text")).alias("ws")
-    )
-    toks = base.select(
-        "doc_id",
-        F.size("ws").alias("nw"),
-        F.posexplode("ws").alias("pos", "w"),
-    )
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("w")] + [F.lead("w", j).over(win) for j in range(1, n)]
     pos_ng = caching.track(
-        toks.select(
-            "doc_id", "nw", "pos", F.concat_ws(" ", *parts).alias("ng")
-        )
-        .filter(F.col("pos") <= F.col("nw") - n)
+        word_ngrams(word_rows(spread_rows(documents, "doc_id")), n)
         .select("doc_id", "pos", stable_hash64("ng").alias("h"))
         .persist(StorageLevel.MEMORY_AND_DISK),
         key="dup_spans",
@@ -1257,31 +1225,19 @@ def span_scrub(
     n-grams collide across docs; the test pins the fixture-checked
     fixed point.
     """
-    from pyspark.sql.window import Window
-
     from mapreduceindex_spark.functions import caching
 
     from mapreduceindex_spark.functions.spread import spread_rows
 
     caching.release("span_scrub")
-    base = spread_rows(documents, "doc_id").select(
-        "doc_id", words(F.col("text")).alias("ws")
-    )
     toks = caching.track(
-        base.select(
-            "doc_id",
-            F.size("ws").alias("nw"),
-            F.posexplode("ws").alias("pos", "w"),
-        ).persist(StorageLevel.MEMORY_AND_DISK),
+        word_rows(spread_rows(documents, "doc_id")).persist(
+            StorageLevel.MEMORY_AND_DISK
+        ),
         key="span_scrub",
     )
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("w")] + [F.lead("w", j).over(win) for j in range(1, n)]
     pos_ng = caching.track(
-        toks.select(
-            "doc_id", "nw", "pos", F.concat_ws(" ", *parts).alias("ng")
-        )
-        .filter(F.col("pos") <= F.col("nw") - n)
+        word_ngrams(toks, n)
         .select("doc_id", "pos", stable_hash64("ng").alias("h"))
         .persist(StorageLevel.MEMORY_AND_DISK),
         key="span_scrub",

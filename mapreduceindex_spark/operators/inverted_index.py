@@ -13,12 +13,13 @@ Reference semantics (SURVEY.md §2, validated against the C implementation):
 
 Spark-first design notes (100 TB):
 
-- The whole map side (O3–O7) is ONE codegen'd stage: split/transform/filter
-  build the per-doc distinct word array without exploding raw tokens, so the
-  explode emits already-deduplicated (word, doc_id) pairs — the map-side
-  combine the reference hand-rolls with its O(u²) scan, for free and O(u).
-- The single shuffle is the ``groupBy(word)`` exchange; partial aggregation
-  (``collect_set`` partial) runs map-side before the exchange.
+- The whole map side (O3–O7) is ONE codegen'd stage: explode the raw
+  whitespace tokens, keep those holding a letter, normalize each once,
+  then a partial ``collect_set(doc_id)`` per word — the map-side
+  combine the reference hand-rolls with its O(u²) scan. The optimizer
+  drops ``doc_words``' ``dropDuplicates`` under the ``collect_set``.
+- The single shuffle is the ``groupBy(word)`` exchange, after the
+  partial aggregate.
 - Stop-word keys are heavily skewed ("the" appears in ~97% of docs —
   reference ``checker/test_out/t.txt``). ``salt_buckets > 0`` enables
   two-phase salted aggregation: ``groupBy(word, doc_id % S)`` partial sets,
@@ -47,19 +48,23 @@ def doc_words(
 ) -> DataFrame:
     """Distinct (word, doc_id) pairs — the map phase (O3–O7).
 
-    Explode-first formulation: split → explode → normalize → filter →
-    dropDuplicates. Every expression stays inside whole-stage codegen
-    (array higher-order functions would fall out of codegen and cost ~3×,
-    measured); ``dropDuplicates`` plans a partial hash aggregate *before*
-    the exchange, so shuffle volume is unique-words-per-partition — the
-    same map-side combine the reference hand-rolls (``mapper.c:71-96``).
+    Explode-first formulation: split → explode → filter → normalize →
+    dropDuplicates. The filter tests the raw token with ``has_words``
+    (it holds a letter iff it normalizes to a word), so the normalizing
+    ``regexp_replace`` runs once per kept token, in the projection.
+    Every expression stays inside whole-stage codegen (array
+    higher-order functions would fall out of codegen and cost ~3×,
+    measured). Standing alone, ``dropDuplicates`` plans a partial hash
+    aggregate before its exchange; under ``inverted_index``'s
+    ``collect_set`` the optimizer removes it, and the partial
+    ``collect_set`` is the map-side combine (``mapper.c:71-96``).
     """
-    from mapreduceindex_spark.functions.text import token_rows
+    from mapreduceindex_spark.functions.text import has_words, token_rows
 
     return (
         token_rows(documents, text_col, id_col)
+        .filter(has_words(F.col("tok")))
         .select("doc_id", "word")
-        .filter(F.length("word") > 0)
         .dropDuplicates(["doc_id", "word"])
     )
 
@@ -616,13 +621,13 @@ def _query_front(documents: DataFrame) -> _QueryFront:
     Built once per corpus through ``caching.memo`` keyed by the input
     plan's fingerprint (the ``dedup._pair_front_end`` discipline): ONE
     persisted frame of the positional postings ``(w, doc_id,
-    positions)``. The token stream (``functions.text.words``, so
-    positions index the non-empty normalized words) is exchanged on
+    positions, df, dl)``. The word rows (``functions.text.word_rows``,
+    so positions index the non-empty normalized words) are exchanged on
     ``w`` alone; the (w, doc_id) aggregate and each posting's word
     ``df`` (a window count over ``w``) run behind that single exchange.
-    Each posting also carries its document's token count ``dl`` (a
-    window sum over ``doc_id`` behind a second exchange on ``doc_id``).
-    The frame is stored in the layout the reads consume:
+    ``dl``, the document's word count, is the row's ``nw`` carried
+    through the aggregate — no second window. The frame is stored in
+    the layout the reads consume:
     hash-partitioned on ``doc_id``, so every per-document aggregate a
     read runs needs no exchange. The corpus constants ``(n_docs,
     total_tokens)`` come from one stats collect over it, kept as a
@@ -636,27 +641,26 @@ def _query_front(documents: DataFrame) -> _QueryFront:
     fingerprint = caching.plan_fingerprint(documents)
 
     def _build():
-        from mapreduceindex_spark.functions.text import words
+        from mapreduceindex_spark.functions.text import word_rows
 
-        toks = documents.select(
-            "doc_id", F.posexplode(words(F.col("text"))).alias("pos", "w")
-        )
         return [
-            toks.repartition("w")
+            word_rows(documents)
+            .repartition("w")
             .groupBy("w", "doc_id")
             .agg(
                 F.array_sort(
                     F.collect_list(F.col("pos").cast("long"))
-                ).alias("positions")
+                ).alias("positions"),
+                F.max("nw").cast("long").alias("dl"),
             )
-            .withColumn(
-                "df", F.count(F.lit(1)).over(Window.partitionBy("w"))
+            .select(
+                "w",
+                "doc_id",
+                "positions",
+                F.count(F.lit(1)).over(Window.partitionBy("w")).alias("df"),
+                "dl",
             )
             .repartition("doc_id")
-            .withColumn(
-                "dl",
-                F.sum(F.size("positions")).over(Window.partitionBy("doc_id")),
-            )
             .persist(StorageLevel.MEMORY_AND_DISK)
         ]
 

@@ -336,12 +336,9 @@ def lm_doc_scores(documents: DataFrame) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from mapreduceindex_spark.functions.text import words
+    from mapreduceindex_spark.functions.text import word_rows
 
-    base = documents.select("doc_id", words(F.col("text")).alias("ws"))
-    toks = base.select(
-        "doc_id", F.posexplode("ws").alias("pos", "w")
-    ).filter(F.length("w") > 0)
+    toks = word_rows(documents)
     win = Window.partitionBy("doc_id").orderBy("pos")
     from mapreduceindex_spark.functions import caching
 
@@ -1685,8 +1682,8 @@ def _winnow_fps(documents: DataFrame, k: int = 3, w: int = 4) -> DataFrame:
     algorithm). Guarantee: any shared token run of length ≥ w+k-1
     between two documents contributes at least one shared fingerprint.
 
-    Plan: posexplode + lead() builds full k-grams (the ``doc_shingles``
-    linear formulation — one window exchange, codegen'd), each gram
+    Plan: ``functions.text.word_ngrams`` builds full k-grams (one
+    window exchange, codegen'd), each gram
     fans out to its ≤ w covering windows (a bounded ×w explode of the
     gram frame, not of the corpus text), and the per-window pick is ONE
     aggregate — min(struct(h, -pos)) selects the min hash with the
@@ -1717,27 +1714,19 @@ def _winnow_fps(documents: DataFrame, k: int = 3, w: int = 4) -> DataFrame:
 
 def _winnow_fps_plan(documents: DataFrame, k: int, w: int) -> DataFrame:
     """The raw (unmemoized) plan behind :func:`_winnow_fps`."""
-    from pyspark.sql.window import Window
-
     from mapreduceindex_spark.functions.spread import spread_rows
-    from mapreduceindex_spark.functions.text import stable_hash64, words
+    from mapreduceindex_spark.functions.text import (
+        stable_hash64,
+        word_ngrams,
+        word_rows,
+    )
 
-    base = spread_rows(documents, "doc_id").select(
-        "doc_id", words(F.col("text")).alias("ws")
-    )
-    toks = base.select(
-        "doc_id",
-        F.size("ws").alias("nw"),
-        F.posexplode("ws").alias("pos", "tok"),
-    )
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", j).over(win) for j in range(1, k)]
-    grams = toks.select(
+    grams = word_ngrams(word_rows(spread_rows(documents, "doc_id")), k).select(
         "doc_id",
         (F.col("nw") - k + 1).cast("long").alias("n_grams"),
         F.col("pos").cast("long").alias("pos"),
-        stable_hash64(F.concat_ws(" ", *parts)).alias("h"),
-    ).filter(F.col("pos") <= F.col("nw") - k)
+        stable_hash64("ng").alias("h"),
+    )
     fan = grams.select(
         "doc_id",
         "n_grams",
@@ -1860,7 +1849,7 @@ def kneser_ney_bigram(documents: DataFrame, top_k: int = 50) -> DataFrame:
     ``price_qty_regression`` discipline) — int64 would overflow near
     c12 · Ntot ≈ 9e12.
 
-    Plan: ONE posexplode+lead token pass builds the bigram count frame
+    Plan: ONE ``word_rows`` + lead pass builds the bigram count frame
     (the ``bigram_lift`` plan); left/continuation/type censuses are
     three aggregates OVER THAT FRAME (vocabulary-bounded, never a
     second corpus scan); top-k by (c12 desc, w1, w2) cuts to ``top_k``
@@ -1871,17 +1860,11 @@ def kneser_ney_bigram(documents: DataFrame, top_k: int = 50) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from mapreduceindex_spark.functions.text import words
+    from mapreduceindex_spark.functions.text import word_rows
 
-    base = documents.select("doc_id", words(F.col("text")).alias("ws"))
-    toks = base.select(
-        "doc_id",
-        F.size("ws").alias("nw"),
-        F.posexplode("ws").alias("pos", "w"),
-    )
     win = Window.partitionBy("doc_id").orderBy("pos")
     big = (
-        toks.select(
+        word_rows(documents).select(
             "nw",
             "pos",
             F.col("w").alias("w1"),

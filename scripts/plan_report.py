@@ -7,7 +7,16 @@ and pruned read schemas — and flags the anti-patterns (CartesianProduct,
 row-at-a-time PythonUDF in a hot path). The full formatted plan of the
 flagship is included verbatim.
 
-Usage: python scripts/plan_report.py   (writes PLANS.md at the repo root)
+Usage::
+
+    python scripts/plan_report.py               # all queries -> PLANS.md
+    ONLY=q1,q2 python scripts/plan_report.py out.md   # subset, own file
+
+``ONLY`` restricts the audit to the named queries (as in
+``scripts/verify_drive.py``); the optional argument is the output path
+(default: PLANS.md at the repo root). A subset report written to its
+own path diffs the touched queries between two checkouts without
+rewriting the tracked PLANS.md.
 """
 
 from __future__ import annotations
@@ -30,7 +39,12 @@ SF = "/root/testdata/sf0.01"
 
 
 def selected_queries(q):
-    return [n for n in q if not n.startswith("streaming_")]
+    names = [n for n in q if not n.startswith("streaming_")]
+    only = os.environ.get("ONLY")
+    if only:
+        wanted = set(only.split(","))
+        names = [n for n in names if n in wanted]
+    return names
 
 
 def audit(plan: str, formatted: str) -> dict:
@@ -90,7 +104,11 @@ def main() -> None:
         f"Fixture: `{SF}`. Counts from the AQE **final** plan after one",
         "materialization (runtime-chosen join strategies, coalesced",
         "exchanges, codegen span ids).",
-        f"Coverage: ALL {len(rows)} batch registry queries (every",
+        (
+            f"Coverage: the {len(rows)} ONLY= queries (a subset of the batch"
+            if os.environ.get("ONLY")
+            else f"Coverage: ALL {len(rows)} batch registry queries (every"
+        ),
         f"queries() entry not prefixed `streaming_`); the {n_streaming}",
         "streaming queries execute their plans inside the streaming",
         "harness and are audited by tests/test_plan_properties.py and",
@@ -119,10 +137,11 @@ def main() -> None:
         "```",
         "",
     ]
-    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
+    out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, "PLANS.md")
+    with open(out, "w") as fh:
         fh.write("\n".join(lines))
     bad = [(n, a) for n, a in rows if a["cartesian"] or a["python_udf_rows"]]
-    print("PLANS.md written;", "CLEAN" if not bad else f"ANTI-PATTERNS: {bad}")
+    print(out, "written;", "CLEAN" if not bad else f"ANTI-PATTERNS: {bad}")
 
 
 if __name__ == "__main__":

@@ -16,7 +16,13 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-from mapreduceindex_spark.functions.text import has_words, normalize_token, words
+from mapreduceindex_spark.functions.text import (
+    has_words,
+    normalize_token,
+    word_ngrams,
+    word_rows,
+    words,
+)
 
 #: Printable-ASCII-plus-whitespace text, the reference's input domain.
 TEXTS = st.text(
@@ -58,6 +64,40 @@ def test_words_matches_python_reference(spark, batch):
     ).collect()
     assert [r["w"] for r in rows] == [_py_words(t) for t in batch]
     assert [r["h"] for r in rows] == [bool(_py_words(t)) for t in batch]
+
+    # the word-position front end and the n-gram builder over it, against
+    # slices of the same Python word lists: strict n-grams, and the
+    # shingles that add each short doc's all-words gram
+    from mapreduceindex_spark.operators.dedup import doc_shingles
+
+    docs = spark.createDataFrame(
+        list(enumerate(batch)), "doc_id BIGINT, text STRING"
+    )
+    py = {i: _py_words(t) for i, t in enumerate(batch)}
+    rows = word_rows(docs)
+    got = sorted(tuple(r) for r in rows.select("doc_id", "pos", "w", "nw").collect())
+    assert got == sorted(
+        (i, p, w, len(ws)) for i, ws in py.items() for p, w in enumerate(ws)
+    )
+    grams = word_ngrams(rows, 2).select(F.lit(2).alias("n"), "doc_id", "pos", "ng")
+    for n in (1, 3):
+        grams = grams.unionByName(
+            word_ngrams(rows, n).select(F.lit(n).alias("n"), "doc_id", "pos", "ng")
+        )
+    got = sorted(tuple(r) for r in grams.collect())
+    assert got == sorted(
+        (n, i, p, " ".join(ws[p : p + n]))
+        for n in (1, 2, 3)
+        for i, ws in py.items()
+        for p in range(len(ws) - n + 1)
+    )
+    got = sorted(tuple(r) for r in doc_shingles(docs, 3, distinct=False).collect())
+    assert got == sorted(
+        (i, " ".join(ws[p : p + 3]))
+        for i, ws in py.items()
+        for p in range(max(len(ws) - 3, 0) + 1)
+        if ws
+    )
 
 
 @given(batch=st.lists(TEXTS, min_size=1, max_size=8))

@@ -10,8 +10,8 @@ corpus gets its own results, results are ranked across partitions,
 ``caching.release()`` rebuilds correctly, the live caches stay
 bounded, ``caching.stats()`` counts the front's builds and hits, a
 warm read with new terms reuses its compiled code, the phrase merge
-chain is evaluated once, and BM25 stays bit-identical to its DuckDB
-twin on an edge corpus.
+chain is evaluated once, the build runs one window, and BM25 stays
+bit-identical to its DuckDB twin on an edge corpus.
 """
 
 from __future__ import annotations
@@ -99,6 +99,23 @@ def _own_operators(plan, describe=lambda op: op.simpleString(25)):
         for i in range(kids.size()):
             ops += _own_operators(kids.apply(i), describe)
     return ops
+
+
+def _plan_nodes(plan):
+    """Node names of an executed plan, through AQE wrappers, query
+    stages and into the cached plan under an InMemoryTableScan."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _plan_nodes(plan.executedPlan())
+    if name.endswith("QueryStage"):
+        return _plan_nodes(plan.plan())
+    if name == "InMemoryTableScan":
+        return [name] + _plan_nodes(plan.relation().cachedPlan())
+    names = [name]
+    kids = plan.children()
+    for i in range(kids.size()):
+        names += _plan_nodes(kids.apply(i))
+    return names
 
 
 def _evaluated(op):
@@ -485,3 +502,23 @@ def test_front_constants_skip_docs_without_words(spark):
     assert dfs["zebra"] == sum(1 for _, t in EDGE if "zebra" in _words(t))
     dls = dict(_rows(front.postings.select("doc_id", "dl").distinct()))
     assert dls == {d: len(_words(t)) for d, t in EDGE if _words(t)}
+
+
+def test_front_build_runs_one_window(spark):
+    """``dl`` is the word rows' ``nw`` carried through the (w, doc_id)
+    aggregate: the front's build runs one window (``df`` over ``w``)
+    and sorts only for it, and still ships postings keyed by doc_id."""
+    caching.release()
+    front = II._query_front(_docs(spark, CORPUS_A))
+    nodes = _plan_nodes(front.postings._jdf.queryExecution().executedPlan())
+    assert nodes[0] == "InMemoryTableScan", nodes
+    assert nodes.count("Window") == 1, nodes
+    assert nodes.count("Sort") == 1, nodes
+    fields = [(f.name, f.dataType.simpleString()) for f in front.postings.schema]
+    assert fields == [
+        ("w", "string"),
+        ("doc_id", "bigint"),
+        ("positions", "array<bigint>"),
+        ("df", "bigint"),
+        ("dl", "bigint"),
+    ]

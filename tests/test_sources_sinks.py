@@ -359,3 +359,73 @@ def test_public_api_and_sql_views(spark):
         "SELECT event_type, count(*) AS c FROM events GROUP BY event_type"
     ).count()
     assert top == 5
+
+
+def test_build_normalizes_each_token_once(spark):
+    """The index build's map side filters raw tokens on ``has_words``
+    before it normalizes them, so the executed plan evaluates the
+    normalizing ``regexp_replace`` once, not again inside a filter."""
+    from mapreduceindex_spark.operators.inverted_index import inverted_index
+
+    idx = inverted_index(
+        spark.createDataFrame(SINK_DOCS, "doc_id long, text string")
+    )
+    idx.collect()
+    plan = (
+        idx._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+        .split("== Initial Plan ==")[0]
+    )
+    assert plan.count("regexp_replace") == 1, plan
+
+
+#: manifest texts: mixed case, punctuation, digits-only tokens, a doc
+#: with no words, and a file the manifest lists twice (two ids)
+CLI_FILES = {
+    "one.txt": "The cat's HAT; the bat.\n",
+    "two.txt": "hat\ttrick 42 Cat\n\nzebra",
+    "three.txt": "123 !!! ...",
+    "four.txt": "Bat, bat, BAT and a hat",
+}
+CLI_MANIFEST = ["one.txt", "two.txt", "three.txt", "four.txt", "one.txt"]
+
+
+def _cli_oracle(texts):
+    """The 26 letter files for manifest-ordered ``texts`` (ids from 1),
+    in the reference format, computed in plain Python."""
+    postings = defaultdict(set)
+    for doc_id, text in enumerate(texts, start=1):
+        for tok in text.split():
+            w = "".join(c for c in tok if c.isascii() and c.isalpha()).lower()
+            if w:
+                postings[w].add(doc_id)
+    files = dict.fromkeys(LETTERS, b"")
+    for w, ids in sorted(postings.items(), key=lambda kv: (-len(kv[1]), kv[0])):
+        files[w[0]] += f"{w}:[{' '.join(map(str, sorted(ids)))}]\n".encode()
+    return files
+
+
+def test_cli_main_writes_reference_letter_files(spark, tmp_path):
+    """``python -m mapreduceindex_spark M R manifest out`` run in-process:
+    exactly the 26 reference letter files (0-byte for empty letters),
+    whatever the mapper count."""
+    from mapreduceindex_spark.__main__ import main
+
+    for name, body in CLI_FILES.items():
+        (tmp_path / name).write_text(body)
+    manifest = tmp_path / "manifest.txt"
+    manifest.write_text("\n".join([str(len(CLI_MANIFEST)), *CLI_MANIFEST]))
+    want = _cli_oracle([CLI_FILES[name] for name in CLI_MANIFEST])
+    assert any(body == b"" for body in want.values())
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n_map, n_red in (("1", "2"), ("4", "3")):
+            out = tmp_path / f"out_{n_map}_{n_red}"
+            out.mkdir()
+            assert main([n_map, n_red, str(manifest), str(out)]) == 0
+            got = {c: (out / f"{c}.txt").read_bytes() for c in LETTERS}
+            assert got == want
+            assert sorted(os.listdir(out)) == [f"{c}.txt" for c in LETTERS]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
